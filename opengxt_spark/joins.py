@@ -17,6 +17,8 @@ Reference parity map:
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import math
 
 from pyspark.sql import Column, DataFrame, Window
@@ -24,6 +26,8 @@ from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
 
 from . import cells, planner, units, world
+
+_log = logging.getLogger(__name__)
 
 
 # Intermediates persisted by two-phase joins (phase-1 results feed the
@@ -151,6 +155,73 @@ def point_density(points: DataFrame) -> float:
     return rho
 
 
+_PAIRS_CACHE: dict[str, tuple[int, float]] = {}
+
+
+def band_pair_estimate(
+    left: DataFrame,
+    right: DataFrame,
+    radius: float,
+    left_xy: tuple[str, str] = ("x", "y"),
+    right_xy: tuple[str, str] = ("x", "y"),
+) -> tuple[int, float, str]:
+    """(n_left, estimated in-radius pairs, cache tier) of a band join.
+
+    A joint cell-count histogram at cell = radius: every in-radius pair
+    lies in a 3x3 cell neighbourhood, so sum over cells of left count x
+    right count in the 3x3 neighbourhood bounds the candidates, and the
+    disc's share pi/9 of that square estimates the pairs — the grid-cell
+    coverage bound of "Joinable Search Over Multi-Source Spatial Datasets"
+    (ICDE 2025). Unlike the uniform n_left * rho * pi r^2 it sees clusters
+    (a dense blob inside a wide bbox). One action (a few jobs under AQE);
+    memoized per canonical plan pair like the other probes. The tier says where the value came
+    from: "memory", "persisted" or "job"."""
+    kl, kr = planner.plan_key(left), planner.plan_key(right)
+    key = hashlib.md5(
+        f"{kl}|{kr}|{left_xy}|{right_xy}|{float(radius)!r}".encode()
+    ).hexdigest()
+    if kl.startswith("mem:") or kr.startswith("mem:"):
+        key = "mem:" + key
+    if key in _PAIRS_CACHE:
+        return (*_PAIRS_CACHE[key], "memory")
+    stored = planner._store_get("pairs", key)
+    if stored is not None:
+        _PAIRS_CACHE[key] = (int(stored[0]), float(stored[1]))
+        return (*_PAIRS_CACHE[key], "persisted")
+    cs = max(float(radius), 1e-6)
+    lx, ly = left_xy
+    rx, ry = right_xy
+    l = left.select(
+        cells.cell_of(lx, cs).alias("cx"), cells.cell_of(ly, cs).alias("cy"),
+        F.lit(1).alias("nl"), F.lit(0).alias("nr"),
+    )
+    # each right point counts toward its own cell and the 8 around it
+    off = F.sequence(F.lit(-1).cast("long"), F.lit(1).cast("long"))
+    r = (
+        right.select(cells.cell_of(rx, cs).alias("_x"),
+                     cells.cell_of(ry, cs).alias("_y"))
+        .withColumn("_dx", F.explode(off))
+        .withColumn("_dy", F.explode(off))
+        .select((F.col("_x") + F.col("_dx")).alias("cx"),
+                (F.col("_y") + F.col("_dy")).alias("cy"),
+                F.lit(0).alias("nl"), F.lit(1).alias("nr"))
+    )
+    with planner._probe_timer():
+        row = (
+            l.unionByName(r).groupBy("cx", "cy")
+            .agg(F.sum("nl").alias("nl"), F.sum("nr").alias("nr"))
+            .agg(F.sum("nl").alias("n"),
+                 F.sum(F.col("nl") * F.col("nr")).alias("c"))
+            .first()
+        )
+    val = (int(row["n"] or 0), float(row["c"] or 0) * math.pi / 9.0)
+    planner._store_put("pairs", key, val)
+    if len(_PAIRS_CACHE) > 256:
+        _PAIRS_CACHE.clear()
+    _PAIRS_CACHE[key] = val
+    return (*val, "job")
+
+
 def _adaptive_first_radius(right: DataFrame, expected: float, radius: float) -> float:
     """Phase-1 radius sized so a point expects ``expected`` in-band
     neighbors: r1 = sqrt(expected / (pi * density)). A fixed fraction of
@@ -202,6 +273,60 @@ def _ring_strategy_n(n_build: int, radius: float, cell_size: float) -> str:
 #: broadcast than shuffled even at local[16], with the gap widening at
 #: lower parallelism.
 RING_BROADCAST_LIMIT = 400_000
+
+#: Cost gate of the ring schedule (knn_join, nearest_join), in estimated
+#: single-phase in-radius pairs per core (band_pair_estimate; times
+#: defaultParallelism). The ring's fixed cost is serial driver work — the
+#: pending count, a scratch persist, late-ring plan branches, ~12 jobs —
+#: while the pair work it saves is parallel. Measured crossover on 4
+#: cores (BENCH.md "Ring-schedule crossover"): about 4.5M estimated pairs
+#: for nearest_join and 7M for knn_join; 1M per core puts the gate at 4M
+#: there, below both.
+SINGLE_PHASE_PAIRS_PER_CORE = 1_000_000
+
+
+def _ring_first_radius(
+    site: str,
+    left: DataFrame,
+    right: DataFrame,
+    radius: float,
+    first_radius: float | None,
+    expected: float,
+    left_cols,
+    right_cols,
+) -> float:
+    """Phase-1 radius of a ring join; ``>= radius`` (or ``<= 0``) means
+    the single-phase path. An explicit ``first_radius`` forces the path.
+    Otherwise the single-phase path runs when band_pair_estimate is at or
+    below the gate, and the ring starts at the density-probed radius that
+    expects ``expected`` neighbours. Each choice is logged at DEBUG on
+    this module's logger with a ``decision`` dict."""
+    if first_radius is not None:
+        r1, n_left, est, threshold, tier = first_radius, None, None, None, "forced"
+    else:
+        n_left, est, tier = band_pair_estimate(
+            left, right, radius, tuple(left_cols[1:3]), tuple(right_cols[1:3])
+        )
+        threshold = (
+            SINGLE_PHASE_PAIRS_PER_CORE
+            * left.sparkSession.sparkContext.defaultParallelism
+        )
+        r1 = (
+            radius if est <= threshold
+            else _adaptive_first_radius(right, expected, radius)
+        )
+    decision = {
+        "site": site, "n_left": n_left,
+        "est_pairs": None if est is None else round(est),
+        "threshold": threshold,
+        "choice": "single" if r1 <= 0 or r1 >= radius else "ring",
+        "probe": tier,
+    }
+    _log.debug(
+        "phase choice %s", " ".join(f"{k}={v}" for k, v in decision.items()),
+        extra={"decision": decision},
+    )
+    return r1
 
 
 def _ring_cell_size(r: float, rho: float) -> float:
@@ -427,15 +552,18 @@ def distance_band_join(
     # probes. Default "right" (the conventional small layer); pass "left"
     # when the left side is the tiny one (e.g. the phase-2 remainder of an
     # adaptive search), otherwise a 44-row probe ends up scanning a
-    # million-row broadcast. Parallelism guards on both: computing a ring
-    # explode of a single-file layer in one task serializes the whole query.
+    # million-row broadcast. Parallelism guards on the input layers:
+    # computing a ring explode of a single-file layer in one task
+    # serializes the whole query. A "left" build is a ring remainder that
+    # comes out of a shuffle with >= 2 x cores partitions, so its guard
+    # would never repartition — and would still pay plan_key's printing of
+    # the deep analyzed plan.
     if build == "left":
         probe = cells.with_point_cells(
             planner.ensure_parallelism(r), x="rx", y="ry", cell_size=cs
         )
         bld = cells.explode_circle_cells(
-            planner.ensure_parallelism(l), x="lx", y="ly", radius=radius,
-            cell_size=cs,
+            l, x="lx", y="ly", radius=radius, cell_size=cs,
         )
     else:
         probe = cells.with_point_cells(
@@ -817,9 +945,10 @@ def _band_pairs_flip(
     r = right.select(
         F.col(rid_).alias("pid_r"), F.col(rx).alias("rx"), F.col(ry).alias("ry")
     )
+    # no parallelism guard on the pending side: it comes out of the
+    # previous ring's aggregate shuffle (>= 2 x cores partitions)
     probe = cells.explode_circle_cells(
-        planner.ensure_parallelism(l), x="lx", y="ly", radius=radius,
-        cell_size=cell_size,
+        l, x="lx", y="ly", radius=radius, cell_size=cell_size,
     )
     bld = (
         cells.with_point_cells(
@@ -928,9 +1057,23 @@ def nearest_join(
     OnlyMatchingRecord (inner). Ties broken by smallest right id — the
     deterministic stand-in for STRtree insertion order (SURVEY.md §7.4).
 
-    The bounded radius is the scalable contract: an unbounded nearest join
-    needs iterative ring expansion; at 100 TB a radius cap (the reference's
-    ``searchRadius``) keeps the candidate set O(points-per-cell).
+    Scale plan — **cost-gated ring schedule**. The bounded radius (the
+    reference's ``searchRadius``) keeps the candidate set
+    O(points-per-cell); within it there are two physical paths with the
+    same rows:
+
+    - *single-phase*: one band join at ``radius`` reduced by min(struct)
+      — one Spark action; build fires only the memoized probes;
+    - *ring*: ring 1 at the density-probed radius expecting ~3 neighbours,
+      an eager pending count that fills a scratch persist, up to two
+      flipped late rings over the collapsed remainder and a cap ring.
+
+    The ring saves parallel pair work for serial driver work, so it pays
+    only for large candidate volumes. ``_ring_first_radius`` decides: the
+    single-phase path runs when the cell-histogram pair estimate
+    (``band_pair_estimate``) is at most SINGLE_PHASE_PAIRS_PER_CORE x
+    defaultParallelism. ``first_radius`` forces a path: ``>= radius`` or
+    ``0`` is single-phase, anything smaller starts the ring there.
 
     ``unit``: DistanceUnit the radius (and first_radius) is given in;
     converted to world units at plan time, and the output ``dist``
@@ -941,23 +1084,21 @@ def nearest_join(
     radius = float(radius) * ufac
     if first_radius is not None:
         first_radius = float(first_radius) * ufac
-    # Iterative ring expansion (SURVEY §2.4): a wide search radius over a
-    # dense layer yields O(n * pi r^2 * density) candidate pairs; most left
-    # rows find their nearest within a much smaller ring. Start at the
-    # density-probed radius expecting ~3 neighbors and grow geometrically,
-    # re-joining only the shrinking unresolved remainder — each step's
-    # survivor fraction is P(Poisson(λ_step) = 0), so the tail work decays
-    # super-exponentially and total candidate volume stays within ~1.5x of
-    # the first ring. A nearest within ring r is the global nearest within
-    # ``radius`` (anything outside the ring is farther) — semantics
-    # identical to the single-phase join.
+    # Iterative ring expansion (SURVEY §2.4), when the gate lets it pay: a
+    # wide search radius over a dense layer yields O(n * pi r^2 * density)
+    # candidate pairs; most left rows find their nearest within a much
+    # smaller ring, so later rings re-join only the shrinking unresolved
+    # remainder — each step's survivor fraction is P(Poisson(λ_step) = 0),
+    # so the tail work decays super-exponentially. A nearest within ring r
+    # is the global nearest within ``radius`` (anything outside the ring
+    # is farther) — semantics identical to the single-phase join.
+    lcols = kw.get("left_cols", ("pid", "x", "y"))
+    rcols = kw.get("right_cols", ("pid", "x", "y"))
     rho = point_density(right)
-    r1 = (
-        first_radius
-        if first_radius is not None
-        else _adaptive_first_radius(right, 3.0, radius)
+    r1 = _ring_first_radius(
+        "nearest_join", left, right, radius, first_radius, 3.0, lcols, rcols
     )
-    lid = kw.get("left_cols", ("pid", "x", "y"))[0]
+    lid = lcols[0]
     explicit_strategy = kw.pop("strategy", None)
     explicit_cell = kw.pop("cell_size", None)
 
@@ -980,10 +1121,7 @@ def nearest_join(
             p = p.where(F.col("pid_l") != F.col("pid_r"))
         return p
 
-    lx, ly = kw.get("left_cols", ("pid", "x", "y"))[1:3]
-
-    lcols = kw.get("left_cols", ("pid", "x", "y"))
-    rcols = kw.get("right_cols", ("pid", "x", "y"))
+    lx, ly = lcols[1:3]
 
     if r1 <= 0 or r1 >= radius:
         best = _nearest_reduce(_pairs(left, radius))
@@ -1167,15 +1305,27 @@ def knn_join(
     back to the struct path when ids can exceed the pack budget
     ((d2m_max+1)*P must stay under 2^63) or ids are negative.
 
-    Scale plan — **two-phase adaptive radius** (the iterative k-ring
-    expansion of SURVEY.md §2.4): a fixed search radius wide enough for
-    sparse regions over-fetches quadratically in dense ones. Phase 1 joins
-    at ``first_radius`` (default: the density-probed radius expecting
-    ~k+4 neighbors); every left point that already found >= k neighbors
-    there is final (its kth neighbor is closer than first_radius < radius,
-    so nothing outside phase 1 can displace it). Only the unresolved
-    remainder re-joins at the full radius. Semantics are identical to the
-    single-phase join.
+    Scale plan — **cost-gated ring schedule** (the iterative k-ring
+    expansion of SURVEY.md §2.4). Two physical paths give the same rows:
+
+    - *single-phase*: one band join at ``radius``, ranked by a window —
+      one Spark action; build fires only the memoized probes;
+    - *ring*: ring 1 at the density-probed radius expecting ~k+4
+      neighbours; every left point with >= k neighbours there is final
+      (its kth neighbour is closer than the ring, so nothing outside can
+      displace it). An eager pending count fills a scratch persist; up to
+      two flipped late rings and a cap ring at ``radius`` re-join only the
+      unresolved remainder.
+
+    A search radius wide enough for sparse regions over-fetches
+    quadratically in dense ones, which is what the ring saves — but it
+    trades that parallel pair work for serial driver work, so it pays only
+    for large candidate volumes. ``_ring_first_radius`` (shared with
+    nearest_join) runs the single-phase path when the cell-histogram pair
+    estimate (``band_pair_estimate``) is at most
+    SINGLE_PHASE_PAIRS_PER_CORE x defaultParallelism, the ring otherwise.
+    ``first_radius`` forces a path: ``>= radius`` or ``0`` is
+    single-phase, anything smaller starts the ring there.
 
     ``unit``: DistanceUnit of the radius; converted to world units at
     plan time, output ``dist`` reported in that unit (DistanceUnit.java:
@@ -1185,14 +1335,15 @@ def knn_join(
     radius = float(radius) * ufac
     if first_radius is not None:
         first_radius = float(first_radius) * ufac
+    lcols = kw.get("left_cols", ("pid", "x", "y"))
+    rcols = kw.get("right_cols", ("pid", "x", "y"))
     rho = point_density(right)
-    r1 = (
-        first_radius
-        if first_radius is not None
-        else _adaptive_first_radius(right, float(k) + 4.0, radius)
+    r1 = _ring_first_radius(
+        "knn_join", left, right, radius, first_radius, float(k) + 4.0,
+        lcols, rcols,
     )
-    lid = kw.get("left_cols", ("pid", "x", "y"))[0]
-    rid_r = kw.get("right_cols", ("pid", "x", "y"))[0]
+    lid = lcols[0]
+    rid_r = rcols[0]
     explicit_strategy = kw.pop("strategy", None)
     explicit_cell = kw.pop("cell_size", None)
 
@@ -1308,9 +1459,7 @@ def knn_join(
     # to the inner path. Top-k is decomposable, so the flipped rings
     # reduce per (pid_l, cell) in-stage first — ≤k-element pre-sliced
     # lists cross the agg exchange, never the pair stream.
-    lx, ly = kw.get("left_cols", ("pid", "x", "y"))[1:3]
-    lcols = kw.get("left_cols", ("pid", "x", "y"))
-    rcols = kw.get("right_cols", ("pid", "x", "y"))
+    lx, ly = lcols[1:3]
     parts: list[DataFrame] = []
     cs = explicit_cell or _ring_cell_size(r1, rho)
     strat = explicit_strategy or _ring_strategy_n(

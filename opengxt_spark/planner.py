@@ -57,25 +57,36 @@ def set_source_epoch(tag: str) -> None:
     carry a measurement across different source datasets.
 
     The epoch mixes in a cheap fingerprint of the directory listing
-    (name/size/mtime per table) so a REGENERATED dataset at the same path
-    invalidates every persisted probe — a stale count/minmax could mis-size
-    the packed top-k encoding, so staleness must be structural, not
-    best-effort."""
+    (name/size/mtime_ns per table, and per file one level inside table
+    directories) so a REGENERATED dataset at the same path invalidates
+    every persisted probe — a stale count/minmax could mis-size the packed
+    top-k encoding, so staleness must be structural, not best-effort.
+    Nanosecond mtimes catch a rewrite within the same second at the same
+    size; the recursion catches part files rewritten in place, which
+    leave the table directory's own mtime unchanged."""
     tag = str(tag)
     fp = ""
-    try:
-        if os.path.isdir(tag):
-            parts = []
-            for name in sorted(os.listdir(tag)):
-                try:
-                    st = os.stat(os.path.join(tag, name))
-                    parts.append(f"{name}:{st.st_size}:{int(st.st_mtime)}")
-                except OSError:
-                    pass
-            fp = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    except OSError:
-        pass
+    if os.path.isdir(tag):
+        parts: list[str] = []
+        _fingerprint(tag, "", parts, depth=1)
+        fp = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
     _SOURCE_EPOCH[0] = f"{tag}@{fp}"
+
+
+def _fingerprint(root: str, rel: str, parts: list[str], depth: int) -> None:
+    try:
+        names = sorted(os.listdir(os.path.join(root, rel)))
+    except OSError:
+        return
+    for name in names:
+        path = os.path.join(rel, name)
+        try:
+            st = os.stat(os.path.join(root, path))
+        except OSError:
+            continue
+        parts.append(f"{path}:{st.st_size}:{st.st_mtime_ns}")
+        if depth > 0 and os.path.isdir(os.path.join(root, path)):
+            _fingerprint(root, path, parts, depth - 1)
 
 
 def plan_key(df: DataFrame) -> str:

@@ -12,6 +12,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Driver heap ceiling when sized from the host (``SPARK_DRIVER_MEM`` unset).
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_mem() -> str:
+    """About half of the host's MemTotal (``/proc/meminfo``), capped at
+    MAX_DRIVER_MEM_MB. Spark and the Python workers live outside the heap,
+    so the other half is theirs. Hosts without /proc/meminfo get 4g."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(min(kb // 2048, MAX_DRIVER_MEM_MB), 512)}m"
+
+
 def get_spark(
     app_name: str = "opengxt-spark",
     cores: int | str | None = None,
@@ -19,11 +36,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver convention) or 32.
+    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver convention) or the
+    host's CPU count. The driver heap is ``$SPARK_DRIVER_MEM`` or
+    default_driver_mem().
     On a real cluster the master/size come from spark-submit; these configs
     are safe there too (AQE, Arrow, adaptive shuffle sizing).
     """
-    cores = int(cores or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(cores or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     shuffle = shuffle_partitions or max(2 * cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -44,7 +64,7 @@ def get_spark(
         # join and grouping run with zero additional exchange.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.requireAllClusterKeysForDistribution", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         # Heap paging policy. Default: do NOT pre-size the heap (-Xms = max
         # without pre-touch was A/B'd in round 1: the second query stalls
         # 60-100 s in kernel page-zeroing while G1 first-touches tens of GB
@@ -57,9 +77,16 @@ def get_spark(
         # queries never pay first-touch; startup cost is untimed.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark 4.1 records the Python call site of every DataFrame API
+        # call for error query contexts: about four extra py4j round trips
+        # per call plus a failed IPython import. The ring joins make
+        # hundreds of such calls per plan build; on 4 cores a ring-path
+        # knn_join build (pending count excluded) took 1.0-2.1 s with it
+        # and 0.9-1.8 s without. Cost of turning it off: error messages
+        # no longer name the Python line in their DataFrame query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if os.environ.get("SPARK_GRAFT_PRETOUCH", "") == "1":
-        mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
         builder = builder.config(
             "spark.driver.extraJavaOptions",
             f"-Xms{mem} -XX:+AlwaysPreTouch",

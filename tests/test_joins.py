@@ -7,12 +7,15 @@ Spark queries and the DuckDB oracle — at sf0.001.
 
 from __future__ import annotations
 
+import logging
 import math
+import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
-from opengxt_spark import joins, world
+from opengxt_spark import joins, planner, world
 from tests import worldref as W
 
 
@@ -174,3 +177,151 @@ def test_band_stats_tiled_equals_broadcast(spark, sf_dir):
     got_td = {r.pid_l: (r.cnt, r.sum_v, r.sum_sq) for r in td.collect()}
     assert got_bc == got_td
     assert len(got_bc) > 0
+
+
+# ---------------------------------------------------------------------------
+# Ring schedule vs single-phase path, and the cost gate between them
+# ---------------------------------------------------------------------------
+
+
+def _points(spark, n: int, seed: int, blob: float = 0.0, size: float = 40.0):
+    """``n`` seeded points on the integer-mm grid of the 1000 x 1000 world.
+    ``blob`` > 0 puts that share of them in ``size``-wide clusters — four
+    of them, or a single one when ``size`` < 20; the rest stay uniform, so
+    the bbox still spans the world."""
+    h = lambda salt: F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(salt)),
+                            F.lit(1 << 30))
+    ux = (h(1) % 1000000) / 1000.0
+    uy = (h(2) % 1000000) / 1000.0
+    span = int(size * 1000)
+    c = (F.col("id") % 4 if size >= 20 else F.lit(0)).cast("int")
+    cx = F.element_at(F.array(*(F.lit(v) for v in (250, 750, 250, 600))), c + 1)
+    cy = F.element_at(F.array(*(F.lit(v) for v in (250, 250, 750, 600))), c + 1)
+    bx = cx + (h(3) % span) / 1000.0
+    by = cy + (h(4) % span) / 1000.0
+    in_blob = (h(5) % 1000) < int(blob * 1000)
+    return spark.range(n).select(
+        F.col("id").alias("pid"),
+        F.when(in_blob, bx).otherwise(ux).alias("x"),
+        F.when(in_blob, by).otherwise(uy).alias("y"),
+    )
+
+
+def _decisions(caplog) -> list[dict]:
+    return [r.decision for r in caplog.records if hasattr(r, "decision")]
+
+
+def _rows(df, cols) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("blob", [0.0, 0.8], ids=["uniform", "clustered"])
+def test_ring_and_single_phase_paths_agree(spark, blob, caplog):
+    """Forcing each path through ``first_radius`` gives identical rows for
+    knn_join (packed and struct top-k) and nearest_join. The layers are
+    dense enough that the ring runs a flipped late ring and the cap ring,
+    so every part of the schedule is compared, not only ring 1."""
+    left = _points(spark, 1000, 11, blob)
+    right = _points(spark, 4000, 12, blob)
+    radius = 80.0
+    knn_cols = ("pid_l", "pid_r", "dist", "rank")
+    cases = [
+        (lambda **kw: joins.knn_join(left, right, k=4, radius=radius,
+                                     exclude_self=False, mm_exact=True, **kw),
+         knn_cols),
+        (lambda **kw: joins.knn_join(left, right, k=4, radius=radius,
+                                     exclude_self=False, **kw),
+         knn_cols),
+        (lambda **kw: joins.nearest_join(left, right, radius=radius, **kw),
+         ("pid_l", "pid_r", "d2", "dist")),
+    ]
+    try:
+        for build, cols in cases:
+            with caplog.at_level(logging.DEBUG, logger="opengxt_spark.joins"):
+                caplog.clear()
+                single = build(first_radius=radius)
+                ring = build(first_radius=3.0)
+            # ring 1's persist plus at least one late ring's
+            assert len(joins._SCRATCH) >= 2
+            assert [d["choice"] for d in _decisions(caplog)] == ["single", "ring"]
+            assert all(d["probe"] == "forced" for d in _decisions(caplog))
+            a, b = _rows(single, cols), _rows(ring, cols)
+            assert a == b and len(a) > 0
+            joins.release_scratch()
+    finally:
+        joins.release_scratch()
+
+
+def test_gate_picks_single_phase_for_small_uniform_layers(spark, sf_dir, caplog):
+    """The registry's uniform layers estimate far below the gate: knn_join
+    builds its single-phase plan — no ring scratch, no eager job."""
+    left = world.points_events(spark, sf_dir)
+    right = world.points_part(spark, sf_dir)
+    joins.release_scratch()
+    with caplog.at_level(logging.DEBUG, logger="opengxt_spark.joins"):
+        out = joins.knn_join(left, right, k=4, radius=50.0, exclude_self=False)
+    assert joins._SCRATCH == []
+    (d,) = _decisions(caplog)
+    assert d["site"] == "knn_join" and d["choice"] == "single"
+    assert d["n_left"] == left.count()
+    assert 0 < d["est_pairs"] <= d["threshold"]
+    assert d["threshold"] == (
+        joins.SINGLE_PHASE_PAIRS_PER_CORE * spark.sparkContext.defaultParallelism
+    )
+    # the estimate tracks the true single-phase pair volume
+    true_pairs = joins.distance_band_join(left, right, 50.0).count()
+    assert 0.5 * true_pairs <= d["est_pairs"] <= 2.0 * true_pairs
+    assert out.count() > 0
+
+
+def test_gate_picks_ring_for_clustered_layers(spark, caplog):
+    """A dense blob inside a world-wide bbox: the uniform estimate
+    n_left * rho * pi r^2 passes the gate, the cell histogram does not —
+    so the gate keeps the ring (a single-phase join here would be
+    quadratic in the blob)."""
+    left = _points(spark, 6000, 21, blob=0.9, size=10.0)
+    right = _points(spark, 8000, 22, blob=0.9, size=10.0)
+    radius = 20.0
+    threshold = (
+        joins.SINGLE_PHASE_PAIRS_PER_CORE * spark.sparkContext.defaultParallelism
+    )
+    uniform = 6000 * joins.point_density(right) * math.pi * radius**2
+    assert uniform <= threshold
+    cols = ("pid", "x", "y")
+    with caplog.at_level(logging.DEBUG, logger="opengxt_spark.joins"):
+        r1 = joins._ring_first_radius(
+            "knn_join", left, right, radius, None, 8.0, cols, cols
+        )
+        again = joins._ring_first_radius(
+            "knn_join", left, right, radius, None, 8.0, cols, cols
+        )
+    assert 0 < r1 < radius and again == r1
+    first, second = _decisions(caplog)
+    assert first["choice"] == "ring" and first["est_pairs"] > threshold
+    assert first["n_left"] == 6000
+    assert first["probe"] in ("job", "persisted") and second["probe"] == "memory"
+
+
+def test_source_epoch_sees_same_second_same_size_rewrite(spark, tmp_path,
+                                                          monkeypatch):
+    """A table regenerated in place within the same second at the same
+    byte size must invalidate its cached count."""
+    monkeypatch.setenv("OPENGXT_PROBE_CACHE", str(tmp_path / "probes.json"))
+    root = tmp_path / "sf"
+    table = root / "t"
+    table.mkdir(parents=True)
+    part = table / "part-0.csv"
+    saved = planner._SOURCE_EPOCH[0]
+    try:
+        part.write_text("1\n2\n3\n")
+        sec = int(os.stat(part).st_mtime)
+        os.utime(part, ns=(sec * 10**9 + 100, sec * 10**9 + 100))
+        planner.set_source_epoch(str(root))
+        assert planner.cached_count(spark.read.csv(str(table))) == 3
+
+        part.write_text("11\n22\n")  # same 6 bytes, two rows
+        os.utime(part, ns=(sec * 10**9 + 200, sec * 10**9 + 200))
+        planner.set_source_epoch(str(root))
+        assert planner.cached_count(spark.read.csv(str(table))) == 2
+    finally:
+        planner._SOURCE_EPOCH[0] = saved
