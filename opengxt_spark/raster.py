@@ -27,7 +27,6 @@ Reference parity:
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -101,24 +100,32 @@ def gen_pixels(okey: int, w: int, h: int) -> np.ndarray:
     return ((okey * 31 + i * 7) % 256).astype(np.uint8).reshape(h, w, 3)
 
 
+def _payloads(okey, w, h, enc=np.ndarray.tobytes) -> list:
+    """Encoded payload of every (okey, w, h) row, in order."""
+    return [
+        enc(gen_pixels(int(k), int(w_), int(h_)))
+        for k, w_, h_ in zip(okey, w, h)
+    ]
+
+
 def with_bytes(meta: DataFrame, fmt: str = "rgb8") -> DataFrame:
-    """Attach the ``bytes`` column (Arrow-batched numpy generator).
+    """Attach the ``bytes`` column: a scalar pandas UDF over (okey, w, h).
 
     fmt='rgb8' is the raw encoding (w*h*3 uint8); fmt='dct' runs the
     pure-numpy lossy transform codec (see ``dctcodec``) — a genuinely
     lossy path for the PSNR>=40dB contract. External wire formats (jpeg,
     webp) would need codec libs absent from this container — decode_image
     raises NotImplementedError for them, per the stubbing contract.
+
+    The payload is an ordinary column, so the optimizer prunes it from
+    every consumer that does not read it: a count, a size aggregate or a
+    metadata-only filter runs no Python at all, and a consumer that does
+    read it (the WebDataset export, patchify) evaluates it once per row.
     """
     from . import dctcodec
 
-    fields = [
-        f if f.name != "fmt" else T.StructField("fmt", T.StringType())
-        for f in meta.schema.fields
-    ]
-    schema = T.StructType(fields + [T.StructField("bytes", T.BinaryType())])
     enc = (
-        (lambda a: a.tobytes())
+        np.ndarray.tobytes
         if fmt == "rgb8"
         else dctcodec.encode
         if fmt == "dct"
@@ -130,22 +137,18 @@ def with_bytes(meta: DataFrame, fmt: str = "rgb8") -> DataFrame:
             "container"
         )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["fmt"] = fmt
-            pdf["bytes"] = [
-                enc(gen_pixels(int(k), int(w_), int(h_)))
-                for k, w_, h_ in zip(pdf["okey"], pdf["w"], pdf["h"])
-            ]
-            yield pdf
+    @F.pandas_udf(T.BinaryType())
+    def gen(okey: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
+        return pd.Series(_payloads(okey, w, h, enc))
 
     # Payload synthesis is the table's decode-equivalent cost; without the
     # guard it runs at the raw orders-scan split count (1-2 partitions at
     # bench scale) and every downstream image op inherits the bottleneck.
     # At real scale a 10^12-row table scan has ample splits and this is a
     # no-op.
-    return planner.ensure_parallelism(meta).mapInPandas(gen, schema=schema)
+    return planner.ensure_parallelism(meta).withColumns(
+        {"fmt": F.lit(fmt), "bytes": gen("okey", "w", "h")}
+    )
 
 
 def payload_rgb8(pdf: pd.DataFrame) -> list:
@@ -153,10 +156,7 @@ def payload_rgb8(pdf: pd.DataFrame) -> list:
     synthesize the deterministic rgb8 payload from a metadata frame.
     Models the pointer-dereference a stored-image pipeline would do at
     the writer (object-store range read) — here the 'pointer' is okey."""
-    return [
-        gen_pixels(int(k), int(w_), int(h_)).tobytes()
-        for k, w_, h_ in zip(pdf["okey"], pdf["w"], pdf["h"])
-    ]
+    return _payloads(pdf["okey"], pdf["w"], pdf["h"])
 
 
 def images_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1020,28 +1020,30 @@ GROUP BY c.ox, c.oy
 
 # Bicubic resample (RasterResampleOperation.java:42, ResampleType.BICUBIC,
 # GT/enumeration/ResampleType.java:26-43): Keys cubic-convolution kernel
-# with a = -0.5 (the public standard). The 2x lattice samples every output
-# center at fractional offsets u in {1/4, 3/4}, where the four Keys taps
+# with a = -0.5 (the public standard). The 2x lattice puts every output
+# center 1/4 pixel past the center of input pixel 2*o on both axes, so
+# every output has the same fractional offset u = 1/4, where the Keys taps
 # have EXACT rational weights with denominator 128:
-#   u=1/4 -> (-9, 111, 29, -3)/128      u=3/4 -> the mirror
+#   u=1/4 -> (-9, 111, 29, -3)/128
 # so the 16-tap 2D sum scaled by 128^2 = 16384 is exact BIGINT arithmetic
 # — fully hash-gated, same trick as the x16 bilinear above. Output lattice
 # restricted to centers whose full 4x4 tap window exists (inner-lattice
 # contract; edge policy is a parameter at production scale).
-_BICUBIC_W = {1: (-9, 111, 29, -3), 3: (-3, 29, 111, -9)}
+_BICUBIC_W = {1: (-9, 111, 29, -3)}  # 4u -> x128 tap weights
 
 
 def _bicubic_w_sql(cvar: str, uvar: str) -> str:
-    lo = " ".join(
-        f"WHEN {cvar} = {i} THEN {w}" for i, w in enumerate(_BICUBIC_W[1])
+    """x128 weight of tap ``cvar`` at phase ``uvar`` (= 4u). Exhaustive: a
+    phase or tap outside the table is NULL, so an output the lattice was
+    not built for sums to NULL instead of borrowing another phase's
+    weights."""
+    phases = " ".join(
+        f"WHEN {uvar} = {u4} THEN (CASE "
+        + " ".join(f"WHEN {cvar} = {i} THEN {w}" for i, w in enumerate(ws))
+        + " ELSE NULL END)"
+        for u4, ws in _BICUBIC_W.items()
     )
-    hi = " ".join(
-        f"WHEN {cvar} = {i} THEN {w}" for i, w in enumerate(_BICUBIC_W[3])
-    )
-    return (
-        f"(CASE WHEN {uvar} = 1 THEN (CASE {lo} END) "
-        f"ELSE (CASE {hi} END) END)"
-    )
+    return f"(CASE {phases} ELSE NULL END)"
 
 
 def raster_resample_bicubic(spark: SparkSession) -> DataFrame:

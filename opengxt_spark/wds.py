@@ -11,12 +11,17 @@ e.g. GeoTools `RasterExportOperation.java` / `FeatureInserter.java:60`,
 buffer rows into external files with a manifest; here the "format" is the
 public WebDataset/tar convention instead of shp/tif):
 
-- **Export**: `repartitionByRange(n_shards, okey)` then one tar written
-  per partition by its own task (no driver funnel, no global window);
-  each task emits a manifest row (file, rows, bytes, okey_min, okey_max)
-  — the same per-partition lineage contract as `checkpoint.py`. Shard
-  count is sized from a one-row count+sum aggregate against the target
-  shard byte size.
+- **Export**: one metadata-only aggregate returns the row count, the
+  payload bytes (which size the shard count against the target shard
+  byte size) and the okey cut points (`percentile_approx`). A JVM
+  `Bucketizer` maps okey to its shard id by binary search over the cuts,
+  `repartitionById` routes each row to its shard, and one tar is written
+  per partition by its own task (no driver funnel, no global window).
+  The payload column is evaluated once, on the map side of that one
+  shuffle. Each task emits a manifest row (file, rows, bytes, okey_min,
+  okey_max) — the same per-partition lineage contract as
+  `checkpoint.py` — and the driver writes the collected rows to
+  `_manifest` with pyarrow.
 - **Import**: a `binaryFile` scan of `*.tar` with an Arrow-batched tar
   parse — shuffle-free, one task per shard, exactly like the shapefile
   source.
@@ -24,31 +29,36 @@ public WebDataset/tar convention instead of shp/tif):
   mtime=0, uid/gid=0, so re-exporting identical data yields bit-identical
   shards (resume-safe, content-addressable).
 
-At 10^12 images nothing here is driver-bound: the only `.collect()` is
-the 1-row sizing aggregate and the manifest write action (one row per
-shard, same as every write job's task-commit messages).
+At 10^12 images nothing here is driver-bound: the driver collects the
+1-row sizing aggregate and the manifest (one row per shard, same as
+every write job's task-commit messages).
 """
 
 from __future__ import annotations
 
 import io
 import json
+import math
 import os
+import shutil
 import tarfile
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: target payload bytes per shard. PRODUCTION DEFAULT: 256 MB - 1 GB
 #: (one shard per task, amortized tar headers, object-store-friendly
 #: object sizes — pass target_bytes=256 << 20 at the call site; the
-#: 256 MB ladder leg in BENCH.md confirms the late path stays the faster
-#: one at that grain). The 4 MB default here is deliberately GATE-SIZED:
-#: it keeps the sf fixtures multi-shard so the multi-file reader, the
-#: manifest zone map, and crash-resume are always exercised.
+#: production-shard-grain leg of BENCH.md "Image-pipeline scaling
+#: (round 4)" confirms the late path stays the faster one at that
+#: grain). The 4 MB default here is deliberately GATE-SIZED: it keeps
+#: the sf fixtures multi-shard so the multi-file reader, the manifest
+#: zone map, and crash-resume are always exercised.
 TARGET_SHARD_BYTES = 4 << 20
 
 _MANIFEST_SCHEMA = T.StructType([
@@ -58,6 +68,17 @@ _MANIFEST_SCHEMA = T.StructType([
     T.StructField("okey_min", T.LongType()),
     T.StructField("okey_max", T.LongType()),
 ])
+
+_MANIFEST_ARROW = pa.schema(
+    [(f.name, pa.string() if f.name == "file" else pa.int64())
+     for f in _MANIFEST_SCHEMA.fields]
+)
+
+#: okey quantiles the sizing aggregate returns. An export of up to
+#: ``_CUT_GRID // 8`` shards reads its cut points off this grid (each cut
+#: within 1/16 of a shard's rows of its exact quantile); a larger export
+#: runs one more metadata-only aggregate for its exact percentages.
+_CUT_GRID = 4096
 
 _SAMPLE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -111,6 +132,42 @@ def _tar_add(out, name: str, payload: bytes) -> None:
         out.write(b"\x00" * pad)
 
 
+def _fractions(k: int) -> Column:
+    """The percentages i/k, 0 < i < k, as one foldable array expression.
+    A split string keeps it to one literal: ``array()`` of k literals
+    costs the parser and analyzer about 0.1 ms per element."""
+    csv = ",".join(repr(i / k) for i in range(1, k))
+    return F.expr(f"CAST(split('{csv}', ',') AS ARRAY<DOUBLE>)")
+
+
+def _okey_cuts(images: DataFrame, target_bytes: int) -> list[float]:
+    """Shard cut points over okey, increasing and distinct, from one
+    metadata-only aggregate (count, payload bytes, okey quantiles).
+
+    ``percentile_approx`` returns input values, so every cut is an okey
+    that starts a shard. Its rank error is 1/``accuracy``, here a tenth
+    of the finest step read off the result. Cuts are returned as doubles
+    (the Bucketizer's domain); okeys beyond 2^53 that round to one double
+    stay in one shard, so shard ranges remain disjoint and increasing."""
+    acc = 10 * _CUT_GRID
+    n, total, qs = images.agg(
+        F.count("*"),
+        F.sum(F.expr("CAST(w AS BIGINT) * h * 3")),
+        F.percentile_approx("okey", _fractions(_CUT_GRID), acc),
+    ).first()
+    if not n:
+        return []
+    n_shards = max(2, -(-int(total or 0) // target_bytes))
+    if 8 * n_shards <= _CUT_GRID:
+        cuts = [qs[round(i * _CUT_GRID / n_shards) - 1]
+                for i in range(1, n_shards)]
+    else:
+        cuts = images.agg(F.percentile_approx(
+            "okey", _fractions(n_shards), max(acc, 10 * n_shards)
+        )).first()[0]
+    return sorted({float(c) for c in cuts})
+
+
 def write_wds_shards(
     images: DataFrame,
     out_dir: str,
@@ -121,43 +178,78 @@ def write_wds_shards(
     """Write the image table as WebDataset tar shards; return the manifest.
 
     ``images`` must carry (image_id, okey, w, h, fmt, caption) plus a
-    ``bytes`` column when ``payload`` is None. Returns the per-shard
-    lineage manifest DataFrame (already persisted to ``out_dir/_manifest``
-    as parquet); the write itself happens when the manifest is
-    materialized, exactly like the shapefile sink.
+    ``bytes`` column when ``payload`` is None. The export runs when
+    called: one metadata-only aggregate sizes and cuts the shards, one
+    shuffle routes rows to their shard's writer task, and the driver
+    writes the collected manifest rows to ``out_dir/_manifest`` (one
+    parquet file, written with pyarrow). Returns the manifest as a
+    local, Arrow-backed DataFrame.
+
+    Shard ``i`` holds the okeys in [cut_i, cut_{i+1}): ranges are disjoint
+    and increasing, and a shard's members are written in okey order.
+    ``bytes`` is read only by the shuffle, so a payload that is a column
+    expression (``raster.with_bytes``) is evaluated once per row, on the
+    map side; the aggregate prunes it.
 
     ``payload``: optional LATE-MATERIALIZATION hook — a callable
     ``(pdf: pd.DataFrame) -> sequence[bytes]`` invoked inside the writer
     task on the shard's metadata frame. When set, only the (small)
-    metadata rows flow through the range shuffle and the heavy payload is
+    metadata rows flow through the shuffle and the heavy payload is
     materialized at the writer — the 10^12-scale export shape (shuffle
     pointers, not pixels: at 100 TB the shuffle of raw bytes is bounded
     by aggregate shuffle-disk bandwidth, while the metadata shuffle is
-    ~10^-3 of it; the range-partitioner's sampling pass also evaluates
-    only the cheap metadata plan). For real stored images the hook is a
-    pointer-dereference (object-store range read); for the synthetic
-    table it is the deterministic generator (`raster.payload_rgb8`).
-    The output shards are BIT-IDENTICAL to the bytes-shuffled path.
+    ~10^-3 of it). Both paths evaluate the payload once per row, so the
+    hook's remaining edge is shuffle volume plus one Python hop: the
+    payload is made in the writer's own Python worker instead of a
+    map-side UDF whose output crosses Arrow twice. For real stored
+    images the hook is a pointer-dereference (object-store range read);
+    for the synthetic table it is the deterministic generator
+    (`raster.payload_rgb8`). The output shards are BIT-IDENTICAL to the
+    bytes-shuffled path.
 
     ``resume``: crash-resume an interrupted export. Every shard is
     written via temp-file + atomic rename (task-commit), so a final
     shard file that exists is complete; with ``resume=True`` those
     tasks skip the payload materialization and tar write and only
     re-emit their manifest rows. Shard content is a pure function of
-    the data, so the resumed output is bit-identical to a fresh export
-    (pytest-pinned). Parity: the reference's FeatureInserter buffered
-    sink commits per-batch (`GT/storage/FeatureInserter.java:60`); here
-    the commit grain is the shard and the ledger is `_manifest`.
+    the data and its cut points, so the resumed output is bit-identical
+    to a fresh export (pytest-pinned). A fresh export records its cut
+    points in ``out_dir/_cuts.json`` before any shard is written and a
+    resumed one reuses them: the cuts are exact only while the quantile
+    summaries stay uncompressed (about 40,960 rows); beyond that they
+    can move with the order in which partial summaries merge, and a
+    resumed shard must have the first run's boundaries. Parity: the
+    reference's FeatureInserter buffered sink commits per-batch
+    (`GT/storage/FeatureInserter.java:60`); here the commit grain is the
+    shard and the ledger is `_manifest`.
     """
+    from pyspark.ml.feature import Bucketizer
+
     os.makedirs(out_dir, exist_ok=True)
     cols = ["image_id", "okey", "w", "h", "fmt", "caption"]
     if payload is None:
         cols.append("bytes")
-    n, total = images.agg(
-        F.count("*"), F.sum(F.expr("CAST(w AS BIGINT) * h * 3"))
-    ).first()
-    n_shards = max(2, -(-int(total or 0) // target_bytes))
-    parts = images.select(*cols).repartitionByRange(n_shards, "okey")
+    cuts_path = os.path.join(out_dir, "_cuts.json")
+    if resume and os.path.exists(cuts_path):
+        with open(cuts_path) as f:
+            cuts = json.load(f)
+    else:
+        cuts = _okey_cuts(images, target_bytes)
+        tmp = f"{cuts_path}.inprogress-{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(cuts, f)
+        os.replace(tmp, cuts_path)
+    rows = images.select(*cols)
+    if cuts:
+        rows = Bucketizer(
+            splits=[-math.inf, *cuts, math.inf],
+            inputCol="okey", outputCol="_shard",
+        ).transform(rows)
+    else:
+        rows = rows.withColumn("_shard", F.lit(0))
+    parts = rows.repartitionById(
+        len(cuts) + 1, F.col("_shard").cast("int")
+    ).drop("_shard")
 
     def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -209,9 +301,19 @@ def write_wds_shards(
             "okey_max": [int(pdf["okey"].max())],
         })
 
-    manifest = parts.mapInPandas(write_part, schema=_MANIFEST_SCHEMA)
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "_manifest"))
-    return images.sparkSession.read.parquet(os.path.join(out_dir, "_manifest"))
+    man = (
+        parts.mapInPandas(write_part, schema=_MANIFEST_SCHEMA)
+        .toPandas()
+        .sort_values("file", ignore_index=True)
+    )
+    mdir = os.path.join(out_dir, "_manifest")
+    shutil.rmtree(mdir, ignore_errors=True)
+    os.makedirs(mdir)
+    pq.write_table(
+        pa.Table.from_pandas(man, schema=_MANIFEST_ARROW, preserve_index=False),
+        os.path.join(mdir, "part-00000.parquet"),
+    )
+    return images.sparkSession.createDataFrame(man, schema=_MANIFEST_SCHEMA)
 
 
 def prune_shards(
@@ -221,18 +323,16 @@ def prune_shards(
     range — the per-shard ledger doubles as a zone map. The export
     range-partitions on okey, so shard ranges are disjoint and a point
     lookup prunes to ONE shard regardless of shard count; the manifest
-    is one tiny parquet row per shard (a metadata-scale read even at
-    10^5 shards)."""
-    man = spark.read.parquet(os.path.join(in_dir, "_manifest"))
-    rows = (
-        man.where(
-            (F.col("okey_max") >= int(okey_lo))
-            & (F.col("okey_min") <= int(okey_hi))
-        )
-        .select("file")
-        .collect()
-    )
-    return sorted(os.path.join(in_dir, r["file"]) for r in rows)
+    is one small parquet row per shard, read on the driver with pyarrow
+    (no Spark job, even at 10^5 shards)."""
+    man = pq.read_table(
+        os.path.join(in_dir, "_manifest"),
+        columns=["file", "okey_min", "okey_max"],
+    ).to_pandas()
+    hit = man["file"][
+        (man["okey_max"] >= int(okey_lo)) & (man["okey_min"] <= int(okey_hi))
+    ]
+    return sorted(os.path.join(in_dir, f) for f in hit)
 
 
 def read_wds_shards(
@@ -323,8 +423,6 @@ def wds_fixture(spark: SparkSession, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     path = os.path.join("/root/repo/.scratch/wds", tag)
     if path not in _FIXED:
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
         write_wds_shards(raster.images_table(spark, sf_dir), path)
         _FIXED.add(path)

@@ -170,7 +170,7 @@ def test_phash_neardup_finds_planted_pairs(spark, sf_dir):
 
 def test_bicubic_weights_are_keys_kernel():
     """The x128 integer weight table IS the Keys a=-0.5 kernel at
-    u in {1/4, 3/4}: matches the closed-form kernel, sums to 128
+    u = 1/4: matches the closed-form kernel, sums to 128
     (partition of unity), and reproduces quadratics exactly — the
     third-order-accuracy property that defines cubic convolution."""
     from opengxt_spark import raster as R
@@ -196,6 +196,29 @@ def test_bicubic_weights_are_keys_kernel():
             f = lambda x: c0 + c1 * x + c2 * x * x
             got = sum(w * f(i - 1) for i, w in enumerate(ws))
             assert got == round(128 * f(u))
+
+
+def test_bicubic_weight_case_is_exhaustive(spark):
+    """The 2x lattice yields one phase (4u = 1) on every output, and the
+    weight CASE is NULL for any other phase or tap instead of applying
+    another phase's weights."""
+    from opengxt_spark import raster as R
+
+    got = {
+        (r.u, r.c): r.w
+        for r in spark.range(5 * 5).selectExpr(
+            "CAST(id % 5 AS BIGINT) AS u", "CAST(id DIV 5 AS BIGINT) AS c"
+        ).selectExpr("u", "c", f"{R._bicubic_w_sql('c', 'u')} AS w").collect()
+    }
+    for (u, c), w in got.items():
+        want = R._BICUBIC_W[u][c] if u in R._BICUBIC_W and c < 4 else None
+        assert w == want, (u, c, w)
+
+    phases = set()
+    for o in range(250):
+        i0 = int(np.floor((o * 4 + 1.5 - 1.0) / 2.0))
+        phases.add(int(4.0 * ((o * 4 + 1.5 - (i0 * 2 + 1)) / 2.0)))
+    assert phases == set(R._BICUBIC_W) == {1}
 
 
 def test_bicubic_resample_inner_lattice(spark):

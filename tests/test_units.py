@@ -152,11 +152,7 @@ def test_buffer_unit(spark):
     assert a == b
 
 
-def test_haversine_joins_unit(spark):
-    """Geodesic surfaces accept unit= too: a radius given in Miles equals
-    the same radius pre-converted to km."""
-    from opengxt_spark import geo
-
+def _lonlat_layers(spark):
     l = spark.range(80).selectExpr(
         "id AS pid",
         "CAST((id * 37) % 80 - 40 AS DOUBLE) / 2.0 AS lon",
@@ -167,6 +163,15 @@ def test_haversine_joins_unit(spark):
         "CAST((id * 53) % 80 - 40 AS DOUBLE) / 2.0 AS lon",
         "CAST((id * 29) % 60 - 30 AS DOUBLE) / 2.0 AS lat",
     )
+    return l, r
+
+
+def test_haversine_joins_unit(spark):
+    """Geodesic surfaces accept unit= too: a radius given in Miles equals
+    the same radius pre-converted to km."""
+    from opengxt_spark import geo
+
+    l, r = _lonlat_layers(spark)
     r_mi = 200.0
     km = geo.haversine_nearest_join(l, r, r_mi * 1609.344 / 1000.0).collect()
     mi = geo.haversine_nearest_join(l, r, r_mi, unit="Miles").collect()
@@ -175,3 +180,15 @@ def test_haversine_joins_unit(spark):
     km2 = geo.haversine_neighbor_count(l, r, r_mi * 1609.344 / 1000.0).collect()
     mi2 = geo.haversine_neighbor_count(l, r, r_mi, unit="Miles").collect()
     assert sorted(map(tuple, km2)) == sorted(map(tuple, mi2))
+
+
+def test_haversine_default_unit_is_no_conversion(spark):
+    """unit="Default" leaves the radius as given (km), like unit=None;
+    it is not read as meters, which would shrink the radius 1000x."""
+    from opengxt_spark import geo
+
+    l, r = _lonlat_layers(spark)
+    for op in (geo.haversine_nearest_join, geo.haversine_neighbor_count):
+        none = sorted(map(tuple, op(l, r, 300.0).collect()))
+        default = sorted(map(tuple, op(l, r, 300.0, unit="Default").collect()))
+        assert default == none and none

@@ -3,7 +3,9 @@
 Runs the headline suite at two core counts and reports throughput at both
 plus scaling efficiency
   efficiency = T(N) / (4 * T(4N))    (equivalently speedup / 4)
-per the BASELINE.json north_rule (target >= 0.8). Writes BENCH.md.
+per the BASELINE.json north_rule (target >= 0.8). Rewrites only its own
+section of BENCH.md, between the SECTION_BEGIN / SECTION_END markers
+(appended when absent); every other section is left as it is.
 
 Measurement design (each choice was forced by a measured artifact):
 - **One JVM per (query, level)**: a shared suite JVM leaks state across
@@ -31,6 +33,20 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SECTION_BEGIN = "<!-- tools/scaling.py: begin -->"
+SECTION_END = "<!-- tools/scaling.py: end -->"
+
+
+def merge_section(doc: str, section: str) -> str:
+    """``doc`` with the text between the markers replaced by ``section``;
+    a doc without the markers gets the marked section appended."""
+    block = f"{SECTION_BEGIN}\n{section}{SECTION_END}"
+    if SECTION_BEGIN in doc and SECTION_END in doc:
+        head, rest = doc.split(SECTION_BEGIN, 1)
+        return head + block + rest.split(SECTION_END, 1)[1]
+    return f"{doc.rstrip()}\n\n{block}\n"
+
 
 SUITE = [
     "pip_count_rect",
@@ -112,7 +128,7 @@ def main() -> None:
     thr_b = round(n_events / t_big, 1) if n_events else None
 
     lines = [
-        "# BENCH — scaling evidence (north_rule)",
+        "## Scaling evidence (north_rule)",
         "",
         f"Same headline suite, same input ({sf_dir}, BENCH_SCALE={scale}),",
         f"two parallelism levels: `local[{n_small}]` (N) vs "
@@ -170,8 +186,13 @@ def main() -> None:
         }),
         "```",
     ]
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    path = os.path.join(REPO, "BENCH.md")
+    doc = "# BENCH\n"
+    if os.path.exists(path):
+        with open(path) as f:
+            doc = f.read()
+    with open(path, "w") as f:
+        f.write(merge_section(doc, "\n".join(lines) + "\n"))
     print(json.dumps({"efficiency": round(eff, 3), "speedup": round(speedup, 3),
                       "t_small": round(t_small, 3), "t_big": round(t_big, 3)}))
 
