@@ -8,9 +8,11 @@ Reference parity map:
 - ``pip_count_join``     <- PointsInPolygonOperation.java:59-123 (count/sum)
 - ``pip_stats_join``     <- PointStatisticsOperation.java:61 (multi stats)
 - ``distance_band_join`` <- NearestNeighborCountOperation.java:71-82
-- ``nearest_join``       <- SpatialJoinOperation.java:125-183 (nearest, 1:1)
-                            and NearOperation.java:77-185 (near id + dist)
 - ``knn_join``           <- KNearestNeighborMapOperation.java:52-141
+- ``nearest_join``       <- SpatialJoinOperation.java:125-183 (nearest, 1:1)
+                            and NearOperation.java:77-185 (near id + dist);
+                            the top-1 case of ``knn_join``, as the
+                            reference's nearest is a top-1 STRtree search
 - ``attribute_join``     <- AttributeJoinProcess.java:42 (plain equi-join)
 - ``hub_lines_by_distance`` <- HubLinesByDistanceOperation.java:63
 """
@@ -230,8 +232,6 @@ def _adaptive_first_radius(right: DataFrame, expected: float, radius: float) -> 
     k=4 query (the true need is ~k): candidate volume IS the cost of the
     phase-1 window, so this probe is the difference between a linear and
     an accidentally-quadratic plan."""
-    import math
-
     rho = point_density(right)
     if rho <= 0:
         return radius / 4.0
@@ -246,16 +246,6 @@ def _ring_cells_per(radius: float, cell_size: float) -> float:
     # r/cs = 0.65 — which silently flipped ring 1 to a near-megarow
     # driver-serial broadcast)
     return 0.82 * (2.0 * radius / cell_size + 1.0) ** 2
-
-
-def _ring_strategy(right: DataFrame, radius: float, cell_size: float) -> str:
-    """Explicit build strategy for a ring join, decided from one memoized
-    count instead of planner.choose_strategy's per-call limit-count job —
-    the ring loop issues several joins per query and each probe job adds
-    serial driver latency that caps scaling at bench sizes."""
-    return _ring_strategy_n(
-        planner.cached_count(right), radius, cell_size
-    )
 
 
 def _ring_strategy_n(n_build: int, radius: float, cell_size: float) -> str:
@@ -315,18 +305,23 @@ def _ring_first_radius(
             radius if est <= threshold
             else _adaptive_first_radius(right, expected, radius)
         )
-    decision = {
+    _log_decision("phase choice", {
         "site": site, "n_left": n_left,
         "est_pairs": None if est is None else round(est),
         "threshold": threshold,
         "choice": "single" if r1 <= 0 or r1 >= radius else "ring",
         "probe": tier,
-    }
+    })
+    return r1
+
+
+def _log_decision(what: str, decision: dict) -> None:
+    """One planner decision at DEBUG on this module's logger, with the
+    fields also as a ``decision`` dict on the record."""
     _log.debug(
-        "phase choice %s", " ".join(f"{k}={v}" for k, v in decision.items()),
+        "%s %s", what, " ".join(f"{k}={v}" for k, v in decision.items()),
         extra={"decision": decision},
     )
-    return r1
 
 
 def _ring_cell_size(r: float, rho: float) -> float:
@@ -345,27 +340,6 @@ def _ring_cell_size(r: float, rho: float) -> float:
     if rho <= 0:
         return max(r / 2.0, 1e-6)
     return min(max(r / 2.0, 1.5 / rho**0.5), max(3.0 * r, 1e-6))
-
-
-def _next_ring_radius(
-    r: float, radius: float, npend: int, rho: float, pairs_budget: float
-) -> float:
-    """Work-equalized ring growth: size the next radius so the expected
-    pair volume npend * pi * rho * r^2 matches ``pairs_budget`` (~ring 1's
-    volume). Survivors of ring r are Poisson-empty points, so npend has
-    collapsed ~e^-lambda and the equal-work radius jumps far (lambda
-    multiplies by n/npend each ring) — survivor probability falls
-    DOUBLY-exponentially and the loop ends in 2-3 rings without ever
-    over-fetching (a fixed geometric growth either jumps to the cap and
-    pulls lambda(cap) ~ 10^3 candidates per pending point, or crawls and
-    pays two serial driver jobs per ring; both measured as the
-    scaling-efficiency cap on this query)."""
-    import math
-
-    if rho <= 0 or npend <= 0:
-        return radius
-    r2 = math.sqrt(pairs_budget / (math.pi * rho * npend))
-    return min(radius, max(r2, 2.0 * r))
 
 
 def pip_pairs_join(
@@ -991,13 +965,12 @@ def _late_ring_radius(
     """Late rings target a RESOLUTION lambda, not work equalization: a
     survivor resolves once its in-radius neighbor count reaches k, so
     pulling lambda ~ 12k per survivor already makes P(still short of k)
-    < 1e-3 even for the locally-sparse points that survive ring 1 —
-    while the work-equalized _next_ring_radius re-spends ring 1's ENTIRE
-    pair budget on the collapsed remainder, overshooting lambda 10-40x
-    (measured at bench scale: ring-2 lambda 129 for k=4 where ~48
-    resolves; 4x the pairs for zero extra resolutions). ``mult`` widens
-    the target for a second late ring (its survivors sit in even sparser
-    pockets)."""
+    < 1e-3 even for the locally-sparse points that survive ring 1. A
+    work-equalized radius, which re-spends ring 1's ENTIRE pair budget on
+    the collapsed remainder, overshoots lambda 10-40x (measured at bench
+    scale: ring-2 lambda 129 for k=4 where ~48 resolves; 4x the pairs for
+    zero extra resolutions). ``mult`` widens the target for a second late
+    ring (its survivors sit in even sparser pockets)."""
     if rho <= 0:
         return radius
     lam_t = 12.0 * max(k, 1) * mult
@@ -1006,12 +979,10 @@ def _late_ring_radius(
 
 
 def _poisson_lt(lam: float, k: int) -> float:
-    """P(Poisson(lam) < k) — the analytic survivor probability that sizes
-    LATE ring radii without a per-ring driver count job (the static
+    """P(Poisson(lam) < k) — the analytic survivor probability that tracks
+    the LATE rings' remainder without a per-ring driver count job (the static
     schedule: only ring 1's count is measured; later rings are small and
     an estimate off by 2x merely unbalances a cheap stage)."""
-    import math
-
     if lam <= 0:
         return 1.0
     if lam > 700:  # exp underflow; survivors ~ 0
@@ -1022,240 +993,6 @@ def _poisson_lt(lam: float, k: int) -> float:
         s += term
         term *= lam / (i + 1)
     return min(max(s, 0.0), 1.0)
-
-
-def _nearest_reduce(pairs: DataFrame) -> DataFrame:
-    # min(struct(d2, pid_r, ...)) orders lexicographically — exact distance
-    # first, id tie-break second — and combines map-side.
-    return (
-        pairs.groupBy("pid_l")
-        .agg(F.min(F.struct("d2", "pid_r", "dist")).alias("_b"))
-        .select(
-            "pid_l",
-            F.col("_b.pid_r").alias("pid_r"),
-            F.col("_b.d2").alias("d2"),
-            F.col("_b.dist").alias("dist"),
-        )
-    )
-
-
-def nearest_join(
-    left: DataFrame,
-    right: DataFrame,
-    radius: float,
-    keep_all: bool = False,
-    exclude_self: bool = False,
-    first_radius: float | None = None,
-    unit: str | None = None,
-    **kw,
-) -> DataFrame:
-    """Nearest-feature join (1:1) within a search radius.
-
-    Reference semantics (SpatialJoinOperation.java:132-164): for each left
-    row, the single nearest right row by distance; ``keep_all`` maps
-    KeepAllRecord (left outer, null join attrs beyond radius) vs
-    OnlyMatchingRecord (inner). Ties broken by smallest right id — the
-    deterministic stand-in for STRtree insertion order (SURVEY.md §7.4).
-
-    Scale plan — **cost-gated ring schedule**. The bounded radius (the
-    reference's ``searchRadius``) keeps the candidate set
-    O(points-per-cell); within it there are two physical paths with the
-    same rows:
-
-    - *single-phase*: one band join at ``radius`` reduced by min(struct)
-      — one Spark action; build fires only the memoized probes;
-    - *ring*: ring 1 at the density-probed radius expecting ~3 neighbours,
-      an eager pending count that fills a scratch persist, up to two
-      flipped late rings over the collapsed remainder and a cap ring.
-
-    The ring saves parallel pair work for serial driver work, so it pays
-    only for large candidate volumes. ``_ring_first_radius`` decides: the
-    single-phase path runs when the cell-histogram pair estimate
-    (``band_pair_estimate``) is at most SINGLE_PHASE_PAIRS_PER_CORE x
-    defaultParallelism. ``first_radius`` forces a path: ``>= radius`` or
-    ``0`` is single-phase, anything smaller starts the ring there.
-
-    ``unit``: DistanceUnit the radius (and first_radius) is given in;
-    converted to world units at plan time, and the output ``dist``
-    reported back in that unit — NearOperation.java:96-117 (radius in)
-    and 145-155 (distance out). Default/None = world units.
-    """
-    ufac = units.factor(unit)
-    radius = float(radius) * ufac
-    if first_radius is not None:
-        first_radius = float(first_radius) * ufac
-    # Iterative ring expansion (SURVEY §2.4), when the gate lets it pay: a
-    # wide search radius over a dense layer yields O(n * pi r^2 * density)
-    # candidate pairs; most left rows find their nearest within a much
-    # smaller ring, so later rings re-join only the shrinking unresolved
-    # remainder — each step's survivor fraction is P(Poisson(λ_step) = 0),
-    # so the tail work decays super-exponentially. A nearest within ring r
-    # is the global nearest within ``radius`` (anything outside the ring
-    # is farther) — semantics identical to the single-phase join.
-    lcols = kw.get("left_cols", ("pid", "x", "y"))
-    rcols = kw.get("right_cols", ("pid", "x", "y"))
-    rho = point_density(right)
-    r1 = _ring_first_radius(
-        "nearest_join", left, right, radius, first_radius, 3.0, lcols, rcols
-    )
-    lid = lcols[0]
-    explicit_strategy = kw.pop("strategy", None)
-    explicit_cell = kw.pop("cell_size", None)
-
-    def _pairs(lf: DataFrame, rad: float, n_lf: int | None = None) -> DataFrame:
-        # Ring-explode the SMALLER side: a late ring's pending remainder is
-        # a few % of the layer, and exploding the full right side at the
-        # final radius was the dominant cost of the whole query (measured
-        # 3 s of a 5 s build at local[32]) — n_lf is the already-known
-        # remainder count, so the flip costs no extra job.
-        cs = explicit_cell or _ring_cell_size(rad, rho)
-        n_r = planner.cached_count(right)
-        side = "left" if (n_lf is not None and n_lf < n_r) else "right"
-        strat = explicit_strategy or _ring_strategy_n(
-            n_lf if side == "left" else n_r, rad, cs
-        )
-        p = distance_band_join(
-            lf, right, rad, cell_size=cs, strategy=strat, build=side, **kw
-        )
-        if exclude_self:
-            p = p.where(F.col("pid_l") != F.col("pid_r"))
-        return p
-
-    lx, ly = lcols[1:3]
-
-    if r1 <= 0 or r1 >= radius:
-        best = _nearest_reduce(_pairs(left, radius))
-    else:
-        # Ring 1 — outer join with in-stage reduction (_band_pairs_outer):
-        # every left point appears in the ring aggregate (pid_r NULL when
-        # nothing is in radius), the min-reduction runs inside the join
-        # stage (zero extra exchange), and the single persisted frame
-        # yields BOTH the resolved output (min is a real pair) and the
-        # pending set (min is NULL — coordinates ride along). ONE serial
-        # driver job total: the pending count materializes the persist and
-        # anchors the late-ring schedule.
-        #
-        # Rings 2+ — FLIPPED outer joins (_band_pairs_flip): the collapsed
-        # pending side is the one ring-exploded; the right layer stays
-        # one-row-one-cell (broadcast when small — zero shuffle). Radii are
-        # work-equalized from ring 1's measured remainder and then the
-        # ANALYTIC Poisson survivor estimate (_poisson_lt) — a static lazy
-        # schedule, no further driver jobs: ring-1's budget re-spent over
-        # the collapsing remainder makes survival fall doubly-
-        # exponentially, so ≤2 late rings before the radius cap. The cap
-        # ring flips to the inner path (every output row has a real pair).
-        parts: list[DataFrame] = []
-        cs = explicit_cell or _ring_cell_size(r1, rho)
-        strat = explicit_strategy or _ring_strategy_n(
-            planner.cached_count(right), r1, cs
-        )
-        pairs = _band_pairs_outer(
-            left, right, r1, cs, strat,
-            left_cols=lcols, right_cols=rcols,
-            exclude_self=exclude_self,
-        )
-        # min(struct) skips the NULLs the outer join emits; all-NULL
-        # groups (no in-ring neighbor) reduce to a NULL struct.
-        agg = _persist_lazy(
-            pairs.groupBy("cell_x", "cell_y", "pid_l").agg(
-                F.min(
-                    F.when(
-                        F.col("pid_r").isNotNull(),
-                        F.struct("d2", "pid_r", "dist"),
-                    )
-                ).alias("_b"),
-                F.min("lx").alias("_sx"),
-                F.min("ly").alias("_sy"),
-            )
-        )
-        parts.append(
-            agg.where(F.col("_b").isNotNull()).select(
-                "pid_l",
-                F.col("_b.pid_r").alias("pid_r"),
-                F.col("_b.d2").alias("d2"),
-                F.col("_b.dist").alias("dist"),
-            )
-        )
-        pending = agg.where(F.col("_b").isNull()).select(
-            F.col("pid_l").alias(lid),
-            F.col("_sx").alias(lx),
-            F.col("_sy").alias(ly),
-        )
-        pcols = (lid, lx, ly)
-        npend = pending.count()  # materializes the ring-1 persist
-        if npend > 0:
-            n_est = float(npend)
-            r = _late_ring_radius(r1, radius, rho, 1)
-            for _i in range(2):
-                if r >= radius:
-                    break
-                cs = explicit_cell or _ring_cell_size(r, rho)
-                strat = explicit_strategy or _flip_strategy(
-                    planner.cached_count(right)
-                )
-                fpairs = _band_pairs_flip(
-                    pending, right, r, cs, strat,
-                    left_cols=pcols, right_cols=rcols,
-                    exclude_self=exclude_self,
-                )
-                # two-level min: per (pid_l, cell) in-stage, then per
-                # pid_l — only one tiny struct per exploded cell crosses
-                # the agg exchange, never the pair stream.
-                lvl1 = fpairs.groupBy("pid_l", "cell_x", "cell_y").agg(
-                    F.min(
-                        F.when(
-                            F.col("pid_r").isNotNull(),
-                            F.struct("d2", "pid_r"),
-                        )
-                    ).alias("_c"),
-                    F.min("lx").alias("_cx"),
-                    F.min("ly").alias("_cy"),
-                )
-                fagg = _persist_lazy(
-                    lvl1.groupBy("pid_l").agg(
-                        F.min("_c").alias("_b"),
-                        F.min("_cx").alias("_sx"),
-                        F.min("_cy").alias("_sy"),
-                    )
-                )
-                parts.append(
-                    fagg.where(F.col("_b").isNotNull()).select(
-                        "pid_l",
-                        F.col("_b.pid_r").alias("pid_r"),
-                        F.col("_b.d2").alias("d2"),
-                        F.round(F.sqrt(F.col("_b.d2")), 6).alias("dist"),
-                    )
-                )
-                pending = fagg.where(F.col("_b").isNull()).select(
-                    F.col("pid_l").alias(lid),
-                    F.col("_sx").alias(lx),
-                    F.col("_sy").alias(ly),
-                )
-                n_est = max(n_est * _poisson_lt(math.pi * rho * r * r, 1), 1.0)
-                if n_est < 16.0:
-                    # The analytic survivor estimate says the remainder is
-                    # a handful of rows: building another flipped ring
-                    # costs a plan branch + two stages to resolve ~nothing.
-                    # Jump straight to the cap ring — its explode factor on
-                    # <16 pending rows is trivial even at the full radius.
-                    break
-                r = _late_ring_radius(r, radius, rho, 1, 6.0 ** (_i + 1))
-            parts.append(
-                _nearest_reduce(_pairs(pending, radius, max(int(n_est), 1)))
-            )
-        best = parts[0]
-        for p in parts[1:]:
-            best = best.unionByName(p)
-    if ufac != 1.0:
-        # Output distance in the requested unit (NearOperation.java:145-155)
-        # — recomputed from the exact d2 so there is a single rounding.
-        best = best.withColumn(
-            "dist", F.round(F.sqrt(F.col("d2")) / F.lit(ufac), 6)
-        )
-    if keep_all:
-        base = left.select(F.col(lid).alias("pid_l"))
-        return base.join(best, on="pid_l", how="left")
-    return best
 
 
 def _mm_dist(d2m):
@@ -1272,6 +1009,42 @@ def _knn_rank(pairs: DataFrame, k: int, by: str = "d2") -> DataFrame:
     if by == "d2m":
         out = out.withColumn("dist", _mm_dist(F.col("d2m")))
     return out
+
+
+def nearest_join(
+    left: DataFrame,
+    right: DataFrame,
+    radius: float,
+    keep_all: bool = False,
+    exclude_self: bool = False,
+    first_radius: float | None = None,
+    unit: str | None = None,
+    **kw,
+) -> DataFrame:
+    """Nearest-feature join (1:1) within radius -> (pid_l, pid_r, d2, dist).
+
+    Reference semantics (SpatialJoinOperation.java:132-164): for each left
+    row, the single nearest right row by distance; ``keep_all`` maps
+    KeepAllRecord (left outer, null join attrs beyond radius) vs
+    OnlyMatchingRecord (inner). Ties broken by smallest right id — the
+    deterministic stand-in for STRtree insertion order (SURVEY.md §7.4).
+
+    The top-1 case of ``knn_join``: the same cost-gated ring schedule (see
+    its Scale plan), with ring 1 sized to expect ~3 neighbours.
+    ``first_radius`` forces a path as there. ``unit``: DistanceUnit the
+    radius (and first_radius) is given in; the output ``dist`` is reported
+    back in that unit — NearOperation.java:96-117 (radius in) and 145-155
+    (distance out). Default/None = world units.
+    """
+    best = _topk_join(
+        "nearest_join", left, right, 1, radius, exclude_self, first_radius,
+        False, unit, 3.0, **kw,
+    ).select("pid_l", "pid_r", "d2", "dist")
+    if keep_all:
+        lid = kw.get("left_cols", ("pid", "x", "y"))[0]
+        base = left.select(F.col(lid).alias("pid_l"))
+        return base.join(best, on="pid_l", how="left")
+    return best
 
 
 def knn_join(
@@ -1308,8 +1081,9 @@ def knn_join(
     Scale plan — **cost-gated ring schedule** (the iterative k-ring
     expansion of SURVEY.md §2.4). Two physical paths give the same rows:
 
-    - *single-phase*: one band join at ``radius``, ranked by a window —
-      one Spark action; build fires only the memoized probes;
+    - *single-phase*: one band join at ``radius``, ranked by a window (by
+      a min aggregate at k=1) — one Spark action; build fires only the
+      memoized probes;
     - *ring*: ring 1 at the density-probed radius expecting ~k+4
       neighbours; every left point with >= k neighbours there is final
       (its kth neighbour is closer than the ring, so nothing outside can
@@ -1320,17 +1094,40 @@ def knn_join(
     A search radius wide enough for sparse regions over-fetches
     quadratically in dense ones, which is what the ring saves — but it
     trades that parallel pair work for serial driver work, so it pays only
-    for large candidate volumes. ``_ring_first_radius`` (shared with
-    nearest_join) runs the single-phase path when the cell-histogram pair
-    estimate (``band_pair_estimate``) is at most
-    SINGLE_PHASE_PAIRS_PER_CORE x defaultParallelism, the ring otherwise.
-    ``first_radius`` forces a path: ``>= radius`` or ``0`` is
-    single-phase, anything smaller starts the ring there.
+    for large candidate volumes. ``_ring_first_radius`` runs the
+    single-phase path when the cell-histogram pair estimate
+    (``band_pair_estimate``) is at most SINGLE_PHASE_PAIRS_PER_CORE x
+    defaultParallelism, the ring otherwise. ``first_radius`` forces a
+    path: ``>= radius`` or ``0`` is single-phase, anything smaller starts
+    the ring there.
 
     ``unit``: DistanceUnit of the radius; converted to world units at
     plan time, output ``dist`` reported in that unit (DistanceUnit.java:
     26-58, NearOperation.java:96-155 contract).
     """
+    return _topk_join(
+        "knn_join", left, right, k, radius, exclude_self, first_radius,
+        mm_exact, unit, float(k) + 4.0, **kw,
+    )
+
+
+def _topk_join(
+    site: str,
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    radius: float,
+    exclude_self: bool,
+    first_radius: float | None,
+    mm_exact: bool,
+    unit: str | None,
+    expected: float,
+    **kw,
+) -> DataFrame:
+    """The ring schedule behind ``knn_join`` and ``nearest_join`` (k=1):
+    top-k right rows per left row within ``radius``. ``site`` names the
+    caller in the decision records; ``expected`` is ring 1's target
+    neighbour count (see ``knn_join``)."""
     ufac = units.factor(unit)
     radius = float(radius) * ufac
     if first_radius is not None:
@@ -1339,25 +1136,27 @@ def knn_join(
     rcols = kw.get("right_cols", ("pid", "x", "y"))
     rho = point_density(right)
     r1 = _ring_first_radius(
-        "knn_join", left, right, radius, first_radius, float(k) + 4.0,
-        lcols, rcols,
+        site, left, right, radius, first_radius, expected, lcols, rcols
     )
-    lid = lcols[0]
-    rid_r = rcols[0]
+    lid, lx, ly = lcols
     explicit_strategy = kw.pop("strategy", None)
     explicit_cell = kw.pop("cell_size", None)
 
     packed = False
     pack_p = 0
     if mm_exact:
-        mn_id, mx_id = planner.cached_minmax(right, rid_r)
+        mn_id, mx_id = planner.cached_minmax(right, rcols[0])
         if mn_id is not None and int(mn_id) >= 0:
             pack_p = 1 << max(int(mx_id).bit_length(), 1)
             d2m_cap = (int(radius * 1000.0) + 2) ** 2
             packed = (d2m_cap + 1) * pack_p + (pack_p - 1) < (1 << 63)
 
     def _pairs(lf: DataFrame, rad: float, n_lf: int | None = None) -> DataFrame:
-        # Ring-explode the smaller side — see nearest_join._pairs.
+        # Ring-explode the SMALLER side: a late ring's pending remainder is
+        # a few % of the layer, and exploding the full right side at the
+        # final radius was the dominant cost of the whole query (measured
+        # 3 s of a 5 s build at local[32]) — n_lf is the already-known
+        # remainder count, so the flip costs no extra job.
         cs = explicit_cell or _ring_cell_size(rad, rho)
         n_r = planner.cached_count(right)
         side = "left" if (n_lf is not None and n_lf < n_r) else "right"
@@ -1381,86 +1180,96 @@ def knn_join(
             "dist", F.round(F.sqrt(F.col("d2")) / F.lit(ufac), 6)
         )
 
-    if r1 <= 0 or r1 >= radius:
-        return _unitize(
-            _knn_rank(_pairs(left, radius), k, by="d2m" if packed else "d2")
-        )
-
-    # Iterative ring expansion. Per step the top-k reduction is a HASH
-    # aggregate — sort_array(collect_list(struct(d2, pid_r))) sliced to k —
-    # not a window: the per-group sort touches ~λ elements, so no step ever
-    # sorts the full pair table. A point whose ring already holds >= k
-    # neighbors is final (its kth neighbor is closer than the ring radius,
-    # so nothing outside can displace it); survivors continue to the next,
-    # work-equalized wider ring.
     # Aggregate ELEMENT + unpack, selected once per query: struct(d2, pid_r)
-    # vs packed bigint d2m*P + pid_r (see mm_exact in the docstring). The
+    # vs packed bigint d2m*P + pid_r (see mm_exact in knn_join). The
     # collect_list payload is the dominant allocation of the whole query;
     # a primitive long per pair instead of a row object is the difference
     # between a GC-coupled and a flat local[8] leg at bench volume.
     if packed:
-        _shift = pack_p.bit_length() - 1
+        shift = pack_p.bit_length() - 1
+        elem = F.col("d2m") * F.lit(pack_p) + F.col("pid_r")
 
-        def _elem():
-            return F.when(
-                F.col("pid_r").isNotNull(),
-                F.col("d2m") * F.lit(pack_p) + F.col("pid_r"),
-            )
-
-        def _explode_topk(agg: DataFrame) -> DataFrame:
-            ex = agg.select(
-                "pid_l",
-                F.posexplode(F.col("_lst")).alias("_pos", "_e"),
-            )
-            d2m = F.shiftright("_e", _shift)
-            return ex.select(
-                "pid_l",
-                F.col("_e").bitwiseAND(F.lit(pack_p - 1)).alias("pid_r"),
-                (d2m.cast("double") / F.lit(1000000.0)).alias("d2"),
-                _mm_dist(d2m).alias("dist"),
-                (F.col("_pos") + 1).cast("int").alias("rank"),
-            )
+        def _unpack(e: Column) -> list[Column]:
+            d2m = F.shiftright(e, shift)
+            return [e.bitwiseAND(F.lit(pack_p - 1)),
+                    d2m.cast("double") / F.lit(1000000.0), _mm_dist(d2m)]
     else:
+        elem = F.struct("d2", "pid_r")
 
-        def _elem():
-            return F.when(
-                F.col("pid_r").isNotNull(), F.struct("d2", "pid_r")
-            )
+        def _unpack(e: Column) -> list[Column]:
+            # dist: the same expression as the pair-level dist
+            return [e["pid_r"], e["d2"], F.round(F.sqrt(e["d2"]), 6)]
 
-        def _explode_topk(agg: DataFrame) -> DataFrame:
-            ex = agg.select(
-                "pid_l",
-                F.posexplode(F.col("_lst")).alias("_pos", "_e"),
-            )
-            return ex.select(
-                "pid_l",
-                F.col("_e.pid_r").alias("pid_r"),
-                F.col("_e.d2").alias("d2"),
-                # identical expression to the pair-level dist (joins.py:360)
-                F.round(F.sqrt(F.col("_e.d2")), 6).alias("dist"),
-                (F.col("_pos") + 1).cast("int").alias("rank"),
-            )
+    elem = F.when(F.col("pid_r").isNotNull(), elem)
+
+    def _explode_topk(agg: DataFrame) -> DataFrame:
+        if k == 1:  # the one element itself, no list
+            ex = agg.select("pid_l", F.lit(0).alias("_pos"),
+                            F.col("_lst").alias("_e"))
+        else:
+            ex = agg.select("pid_l", F.posexplode("_lst").alias("_pos", "_e"))
+        pid_r, d2, dist = _unpack(F.col("_e"))
+        return ex.select(
+            "pid_l", pid_r.alias("pid_r"), d2.alias("d2"), dist.alias("dist"),
+            (F.col("_pos") + 1).cast("int").alias("rank"),
+        )
+
+    # Per step the top-k reduction is an aggregate — the k smallest
+    # elements, ascending — not a window: the per-group sort touches ~λ
+    # elements, so no step ever sorts the full pair table. At k=1 it is the
+    # plain min element, not a list: no collect_list buffer of every
+    # candidate and no explode (BENCH.md "nearest_join as top-1 of
+    # knn_join"). NULL elements (outer rows with no in-ring neighbour)
+    # drop out of both forms.
+    def _topk(e: Column) -> Column:
+        if k == 1:
+            return F.min(e)
+        return F.slice(F.sort_array(F.collect_list(e)), 1, k)
+
+    def _topk_merge(c: str) -> Column:
+        # top-k of per-cell top-k lists == global top-k
+        if k == 1:
+            return F.min(c)
+        return F.slice(F.sort_array(F.flatten(F.collect_list(c))), 1, k)
 
     def _topk_agg(pairs: DataFrame) -> DataFrame:
-        # Cap-ring reduction: inner pair join, so _elem()'s NULL guard is
-        # vacuous; the element/order encoding must match the rings'.
+        # Single-phase and cap-ring reduction: inner pair join, so elem's
+        # NULL guard is vacuous; the element/order encoding must match the
+        # rings'.
         return pairs.groupBy("pid_l").agg(
-            F.slice(
-                F.sort_array(F.collect_list(_elem())),
-                1, k,
-            ).alias("_lst"),
+            _topk(elem).alias("_lst"),
             F.count(F.lit(1)).alias("_n"),
         )
 
-    # Ring schedule (see nearest_join): ring 1 is the in-stage outer join
-    # over the full left layer — one serial driver job (the pending count)
-    # total; rings 2+ are FLIPPED outer joins over the collapsed remainder
-    # with a static, analytically-sized lazy schedule; the cap ring flips
-    # to the inner path. Top-k is decomposable, so the flipped rings
-    # reduce per (pid_l, cell) in-stage first — ≤k-element pre-sliced
-    # lists cross the agg exchange, never the pair stream.
-    lx, ly = lcols[1:3]
+    if r1 <= 0 or r1 >= radius:
+        pairs = _pairs(left, radius)
+        if k == 1:  # a min combines map-side; a window sorts every pair
+            return _unitize(_explode_topk(_topk_agg(pairs)))
+        return _unitize(_knn_rank(pairs, k, by="d2m" if packed else "d2"))
+
+    # Iterative ring expansion (SURVEY §2.4): a point whose ring holds >= k
+    # neighbours is final, so later rings re-join only the shrinking
+    # remainder. Ring 1 is an outer join with the top-k reduction in-stage
+    # (_band_pairs_outer); its one persisted aggregate yields both the
+    # resolved rows and the pending set, and the pending count is the ONE
+    # serial driver job. Rings 2+ are FLIPPED outer joins
+    # (_band_pairs_flip) that ring-explode the collapsed pending side,
+    # reduce per (pid_l, cell) in-stage first (top-k is decomposable, so
+    # only ≤k-element lists cross the agg exchange) and follow a static
+    # schedule: radii from _late_ring_radius, the remainder tracked by the
+    # analytic Poisson survivor share, no further driver jobs. The cap ring
+    # at ``radius`` takes the inner path.
     parts: list[DataFrame] = []
+
+    def _split(a: DataFrame) -> DataFrame:
+        # resolved rows to the output; the rest, coordinates riding along,
+        # is the next ring's pending set
+        parts.append(_explode_topk(a.where(F.col("_n") >= k)))
+        return a.where(F.col("_n") < k).select(
+            F.col("pid_l").alias(lid), F.col("_sx").alias(lx),
+            F.col("_sy").alias(ly),
+        )
+
     cs = explicit_cell or _ring_cell_size(r1, rho)
     strat = explicit_strategy or _ring_strategy_n(
         planner.cached_count(right), r1, cs
@@ -1471,25 +1280,24 @@ def knn_join(
     )
     agg = _persist_lazy(
         pairs.groupBy("cell_x", "cell_y", "pid_l").agg(
-            F.slice(
-                # collect_list drops NULL elements — outer rows (no
-                # in-ring neighbor) contribute nothing.
-                F.sort_array(F.collect_list(_elem())),
-                1, k,
-            ).alias("_lst"),
+            _topk(elem).alias("_lst"),
             F.count("pid_r").alias("_n"),  # non-null = real pairs
             F.min("lx").alias("_sx"),
             F.min("ly").alias("_sy"),
         )
     )
-    parts.append(_explode_topk(agg.where(F.col("_n") >= k)))
-    pending = agg.where(F.col("_n") < k).select(
-        F.col("pid_l").alias(lid),
-        F.col("_sx").alias(lx),
-        F.col("_sy").alias(ly),
-    )
-    pcols = (lid, lx, ly)
+    pending = _split(agg)
     npend = pending.count()  # materializes the ring-1 persist
+
+    def _survivor_share(r: float) -> float:
+        # P(Poisson(pi rho r^2) < k): the share of points a ring of radius
+        # r leaves short of k neighbours
+        return _poisson_lt(math.pi * rho * r * r, k)
+
+    _log_decision("ring survivors", {
+        "site": site, "ring": 1, "radius": r1,
+        "predicted_share": _survivor_share(r1), "npend": npend,
+    })
     if npend > 0:
         n_est = float(npend)
         r = _late_ring_radius(r1, radius, rho, k)
@@ -1502,40 +1310,32 @@ def knn_join(
             )
             fpairs = _band_pairs_flip(
                 pending, right, r, cs, strat,
-                left_cols=pcols, right_cols=rcols, exclude_self=exclude_self,
+                left_cols=lcols, right_cols=rcols, exclude_self=exclude_self,
             )
             lvl1 = fpairs.groupBy("pid_l", "cell_x", "cell_y").agg(
-                F.slice(
-                    F.sort_array(F.collect_list(_elem())),
-                    1, k,
-                ).alias("_c"),
+                _topk(elem).alias("_c"),
                 F.count("pid_r").alias("_cn"),
                 F.min("lx").alias("_cx"),
                 F.min("ly").alias("_cy"),
             )
             fagg = _persist_lazy(
                 lvl1.groupBy("pid_l").agg(
-                    # top-k of per-cell top-k lists == global top-k; the
-                    # UNsliced per-cell counts sum to the true in-radius
-                    # neighbor count that decides resolution.
-                    F.slice(
-                        F.sort_array(F.flatten(F.collect_list("_c"))), 1, k
-                    ).alias("_lst"),
+                    # the UNreduced per-cell counts sum to the true
+                    # in-radius neighbor count that decides resolution.
+                    _topk_merge("_c").alias("_lst"),
                     F.sum("_cn").alias("_n"),
                     F.min("_cx").alias("_sx"),
                     F.min("_cy").alias("_sy"),
                 )
             )
-            parts.append(_explode_topk(fagg.where(F.col("_n") >= k)))
-            pending = fagg.where(F.col("_n") < k).select(
-                F.col("pid_l").alias(lid),
-                F.col("_sx").alias(lx),
-                F.col("_sy").alias(ly),
-            )
-            n_est = max(n_est * _poisson_lt(math.pi * rho * r * r, k), 1.0)
+            pending = _split(fagg)
+            n_est = max(n_est * _survivor_share(r), 1.0)
             if n_est < 16.0:
-                # see nearest_join: skip further rings once the analytic
-                # schedule says the remainder is a handful of rows.
+                # The analytic survivor estimate says the remainder is a
+                # handful of rows: building another flipped ring costs a
+                # plan branch + two stages to resolve ~nothing. Jump
+                # straight to the cap ring — its explode factor on <16
+                # pending rows is trivial even at the full radius.
                 break
             r = _late_ring_radius(r, radius, rho, k, 6.0 ** (_i + 1))
         # Stragglers at the radius cap: inner path, ring-exploding the

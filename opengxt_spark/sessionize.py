@@ -98,9 +98,12 @@ def stream_sessionize(
     State per user_id is the one open session. Each micro-batch folds its
     (event-time-sorted) rows: events within ``gap_s`` of the last extend
     the session, a later event closes-and-emits it and opens the next.
-    Event-time timeout closes sessions the watermark has passed, so state
-    is bounded by the number of users active inside the watermark horizon
-    — the 10^12-row contract (RocksDB state store on a real cluster)."""
+    Event-time timeout closes sessions the watermark has passed and
+    shrinks the user's state to a counter-only row: the sid counter must
+    survive, or the next session would restart at sid=1. State is
+    therefore one small row per user ever seen (open sessions only for
+    users active inside the watermark horizon) — the cost of exact
+    batch-parity numbering (RocksDB state store on a real cluster)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout

@@ -218,33 +218,51 @@ def _rows(df, cols) -> list[tuple]:
 @pytest.mark.parametrize("blob", [0.0, 0.8], ids=["uniform", "clustered"])
 def test_ring_and_single_phase_paths_agree(spark, blob, caplog):
     """Forcing each path through ``first_radius`` gives identical rows for
-    knn_join (packed and struct top-k) and nearest_join. The layers are
-    dense enough that the ring runs a flipped late ring and the cap ring,
-    so every part of the schedule is compared, not only ring 1."""
+    knn_join (packed and struct top-k, at k=4 and at k=1) and nearest_join
+    (plain, and a Feet-unit keep_all self-join). The layers are dense
+    enough that the ring runs a flipped late ring and the cap ring, so
+    every part of the schedule is compared, not only ring 1."""
     left = _points(spark, 1000, 11, blob)
     right = _points(spark, 4000, 12, blob)
     radius = 80.0
+    ft = 0.3048  # the self-join's radii in feet, the same world radii
     knn_cols = ("pid_l", "pid_r", "dist", "rank")
+    near_cols = ("pid_l", "pid_r", "d2", "dist")
     cases = [
         (lambda **kw: joins.knn_join(left, right, k=4, radius=radius,
                                      exclude_self=False, mm_exact=True, **kw),
-         knn_cols),
+         knn_cols, "knn_join"),
         (lambda **kw: joins.knn_join(left, right, k=4, radius=radius,
                                      exclude_self=False, **kw),
-         knn_cols),
+         knn_cols, "knn_join"),
+        (lambda **kw: joins.knn_join(left, right, k=1, radius=radius,
+                                     exclude_self=False, mm_exact=True, **kw),
+         knn_cols, "knn_join"),
+        (lambda **kw: joins.knn_join(left, right, k=1, radius=radius,
+                                     exclude_self=False, **kw),
+         knn_cols, "knn_join"),
         (lambda **kw: joins.nearest_join(left, right, radius=radius, **kw),
-         ("pid_l", "pid_r", "d2", "dist")),
+         near_cols, "nearest_join"),
+        (lambda first_radius: joins.nearest_join(
+            left, left, radius=radius / ft, exclude_self=True, keep_all=True,
+            unit="Feet", first_radius=first_radius / ft),
+         near_cols, "nearest_join"),
     ]
     try:
-        for build, cols in cases:
+        for build, cols, site in cases:
             with caplog.at_level(logging.DEBUG, logger="opengxt_spark.joins"):
                 caplog.clear()
                 single = build(first_radius=radius)
                 ring = build(first_radius=3.0)
             # ring 1's persist plus at least one late ring's
             assert len(joins._SCRATCH) >= 2
-            assert [d["choice"] for d in _decisions(caplog)] == ["single", "ring"]
-            assert all(d["probe"] == "forced" for d in _decisions(caplog))
+            choices = [d for d in _decisions(caplog) if "choice" in d]
+            assert [d["choice"] for d in choices] == ["single", "ring"]
+            assert all(d["probe"] == "forced" for d in choices)
+            # ring 1's measured survivors next to the Poisson prediction
+            (surv,) = [d for d in _decisions(caplog) if d.get("ring") == 1]
+            assert surv["npend"] > 0 and 0 < surv["predicted_share"] < 1
+            assert all(d["site"] == site for d in _decisions(caplog))
             a, b = _rows(single, cols), _rows(ring, cols)
             assert a == b and len(a) > 0
             joins.release_scratch()

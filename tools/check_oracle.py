@@ -125,6 +125,11 @@ def main() -> int:
         with open(out, "w") as f:
             json.dump(records, f, indent=1)
         print(f"wrote {out} ({len(records)} queries)")
+        missing = sorted(set(qs) - set(records))
+        if not only and missing:
+            # a full-run artifact must cover the whole registry
+            print("MISSING FROM ARTIFACT:", missing)
+            return 1
     if failures:
         print("FAILURES:", failures)
         return 1
