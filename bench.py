@@ -164,8 +164,9 @@ def main() -> None:
     for name in names:
         # Warm one full build+execute (codegen/JIT, excluded from timing).
         # probe_s is the measured wall time of the ACTUAL probe jobs the
-        # warm build fires (planner._probe_timer accumulator — zero when
-        # the persistent probe cache is warm); warm_s is the rest of the
+        # warm build fires (planner.probe_seconds(): the job wall time of
+        # planner.memo_probe's misses — zero when the persistent probe
+        # cache is warm); warm_s is the rest of the
         # first-build overhead (codegen/JIT/broadcast warmup of any eager
         # build-time job), reported separately so cold-JIT cost is not
         # misattributed to probes.

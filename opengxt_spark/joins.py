@@ -19,7 +19,6 @@ Reference parity map:
 
 from __future__ import annotations
 
-import hashlib
 import logging
 import math
 
@@ -89,75 +88,43 @@ def _prep_rects(polygons: DataFrame, cell_size: float) -> DataFrame:
     )
 
 
-# Plan-time probe results keyed by the build DataFrame's CANONICAL plan
-# (planner.plan_key — analyzed plan stripped of expression ids), so a
-# rebuilt identical plan (every gate query sharing a layer, every bench
-# repeat) re-uses the measurement instead of re-running the eager probe job.
-_CELL_SIZE_CACHE: dict[str, float] = {}
-
-
 def adaptive_cell_size(rects: DataFrame) -> float:
     """Cell size matched to the polygon layer's typical extent — the
     reference's adaptive-default pattern (SURVEY §4.1: cell = extent/250,
     band = max-NN-distance; here cell ~ mean rect dimension). Candidate
     count per probe point scales with (w + cs)(h + cs)/area, minimized
     near cs ~ the geometry size; one cheap agg at plan time decides it
-    (memoized per canonical plan — see _CELL_SIZE_CACHE).
+    (planner.memo_probe).
     """
-    key = planner.plan_key(rects)
-    if key in _CELL_SIZE_CACHE:
-        return _CELL_SIZE_CACHE[key]
-    stored = planner._store_get("cell_size", key)
-    if stored is not None:
-        _CELL_SIZE_CACHE[key] = float(stored)
-        return float(stored)
-    with planner._probe_timer():
+
+    def job() -> float:
         row = rects.agg(
             F.avg(F.expr("GREATEST(hw, hh)")).alias("m")
         ).collect()[0]
-    m = float(row["m"] or cells.DEFAULT_CELL_SIZE / 2)
-    cs = min(max(2.0 * m, 4.0), 200.0)
-    planner._store_put("cell_size", key, cs)
-    if len(_CELL_SIZE_CACHE) > 256:
-        _CELL_SIZE_CACHE.clear()
-    _CELL_SIZE_CACHE[key] = cs
-    return cs
+        m = float(row["m"] or cells.DEFAULT_CELL_SIZE / 2)
+        return min(max(2.0 * m, 4.0), 200.0)
 
-
-_DENSITY_CACHE: dict[str, float] = {}
+    return planner.memo_probe("cell_size", [rects], None, job)[0]
 
 
 def point_density(points: DataFrame) -> float:
     """Points per unit area over the layer's bbox — the plan-time probe
-    that sizes adaptive first-phase radii (memoized per canonical plan,
-    persisted across sessions for file-backed plans)."""
-    key = planner.plan_key(points)
-    if key in _DENSITY_CACHE:
-        return _DENSITY_CACHE[key]
-    stored = planner._store_get("density", key)
-    if stored is not None:
-        _DENSITY_CACHE[key] = float(stored)
-        return float(stored)
-    with planner._probe_timer():
+    that sizes adaptive first-phase radii (planner.memo_probe)."""
+
+    def job() -> float:
         row = points.agg(
             F.count(F.lit(1)).alias("n"),
             F.min("x").alias("x0"), F.max("x").alias("x1"),
             F.min("y").alias("y0"), F.max("y").alias("y1"),
         ).collect()[0]
-    area = max(
-        (float(row["x1"]) - float(row["x0"]))
-        * (float(row["y1"]) - float(row["y0"])),
-        1e-9,
-    )
-    rho = float(row["n"]) / area
-    planner._store_put("density", key, rho)
-    if len(_DENSITY_CACHE) > 256:
-        _DENSITY_CACHE.clear()
-    _DENSITY_CACHE[key] = rho
-    return rho
+        area = max(
+            (float(row["x1"]) - float(row["x0"]))
+            * (float(row["y1"]) - float(row["y0"])),
+            1e-9,
+        )
+        return float(row["n"]) / area
 
-
-_PAIRS_CACHE: dict[str, tuple[int, float]] = {}
+    return planner.memo_probe("density", [points], None, job)[0]
 
 
 def band_pair_estimate(
@@ -167,7 +134,7 @@ def band_pair_estimate(
     left_xy: tuple[str, str] = ("x", "y"),
     right_xy: tuple[str, str] = ("x", "y"),
 ) -> tuple[int, float, str]:
-    """(n_left, estimated in-radius pairs, cache tier) of a band join.
+    """(n_left, estimated in-radius pairs, probe tier) of a band join.
 
     A joint cell-count histogram at cell = radius: every in-radius pair
     lies in a 3x3 cell neighbourhood, so sum over cells of left count x
@@ -175,40 +142,30 @@ def band_pair_estimate(
     disc's share pi/9 of that square estimates the pairs — the grid-cell
     coverage bound of "Joinable Search Over Multi-Source Spatial Datasets"
     (ICDE 2025). Unlike the uniform n_left * rho * pi r^2 it sees clusters
-    (a dense blob inside a wide bbox). One action (a few jobs under AQE);
-    memoized per canonical plan pair like the other probes. The tier says where the value came
-    from: "memory", "persisted" or "job"."""
-    kl, kr = planner.plan_key(left), planner.plan_key(right)
-    key = hashlib.md5(
-        f"{kl}|{kr}|{left_xy}|{right_xy}|{float(radius)!r}".encode()
-    ).hexdigest()
-    if kl.startswith("mem:") or kr.startswith("mem:"):
-        key = "mem:" + key
-    if key in _PAIRS_CACHE:
-        return (*_PAIRS_CACHE[key], "memory")
-    stored = planner._store_get("pairs", key)
-    if stored is not None:
-        _PAIRS_CACHE[key] = (int(stored[0]), float(stored[1]))
-        return (*_PAIRS_CACHE[key], "persisted")
+    (a dense blob inside a wide bbox). One action (a few jobs under AQE),
+    memoized per plan pair by planner.memo_probe, whose tier ("memory",
+    "persisted" or "job") is the third element."""
     cs = max(float(radius), 1e-6)
     lx, ly = left_xy
     rx, ry = right_xy
-    l = left.select(
-        cells.cell_of(lx, cs).alias("cx"), cells.cell_of(ly, cs).alias("cy"),
-        F.lit(1).alias("nl"), F.lit(0).alias("nr"),
-    )
-    # each right point counts toward its own cell and the 8 around it
-    off = F.sequence(F.lit(-1).cast("long"), F.lit(1).cast("long"))
-    r = (
-        right.select(cells.cell_of(rx, cs).alias("_x"),
-                     cells.cell_of(ry, cs).alias("_y"))
-        .withColumn("_dx", F.explode(off))
-        .withColumn("_dy", F.explode(off))
-        .select((F.col("_x") + F.col("_dx")).alias("cx"),
-                (F.col("_y") + F.col("_dy")).alias("cy"),
-                F.lit(0).alias("nl"), F.lit(1).alias("nr"))
-    )
-    with planner._probe_timer():
+
+    def job() -> tuple[int, float]:
+        l = left.select(
+            cells.cell_of(lx, cs).alias("cx"),
+            cells.cell_of(ly, cs).alias("cy"),
+            F.lit(1).alias("nl"), F.lit(0).alias("nr"),
+        )
+        # each right point counts toward its own cell and the 8 around it
+        off = F.sequence(F.lit(-1).cast("long"), F.lit(1).cast("long"))
+        r = (
+            right.select(cells.cell_of(rx, cs).alias("_x"),
+                         cells.cell_of(ry, cs).alias("_y"))
+            .withColumn("_dx", F.explode(off))
+            .withColumn("_dy", F.explode(off))
+            .select((F.col("_x") + F.col("_dx")).alias("cx"),
+                    (F.col("_y") + F.col("_dy")).alias("cy"),
+                    F.lit(0).alias("nl"), F.lit(1).alias("nr"))
+        )
         row = (
             l.unionByName(r).groupBy("cx", "cy")
             .agg(F.sum("nl").alias("nl"), F.sum("nr").alias("nr"))
@@ -216,12 +173,11 @@ def band_pair_estimate(
                  F.sum(F.col("nl") * F.col("nr")).alias("c"))
             .first()
         )
-    val = (int(row["n"] or 0), float(row["c"] or 0) * math.pi / 9.0)
-    planner._store_put("pairs", key, val)
-    if len(_PAIRS_CACHE) > 256:
-        _PAIRS_CACHE.clear()
-    _PAIRS_CACHE[key] = val
-    return (*val, "job")
+        return (int(row["n"] or 0), float(row["c"] or 0) * math.pi / 9.0)
+
+    params = (tuple(left_xy), tuple(right_xy), float(radius))
+    (n, est), tier = planner.memo_probe("pairs", [left, right], params, job)
+    return n, est, tier
 
 
 def _adaptive_first_radius(right: DataFrame, expected: float, radius: float) -> float:
@@ -305,7 +261,7 @@ def _ring_first_radius(
             radius if est <= threshold
             else _adaptive_first_radius(right, expected, radius)
         )
-    _log_decision("phase choice", {
+    planner.log_decision(_log, "phase choice", {
         "site": site, "n_left": n_left,
         "est_pairs": None if est is None else round(est),
         "threshold": threshold,
@@ -313,15 +269,6 @@ def _ring_first_radius(
         "probe": tier,
     })
     return r1
-
-
-def _log_decision(what: str, decision: dict) -> None:
-    """One planner decision at DEBUG on this module's logger, with the
-    fields also as a ``decision`` dict on the record."""
-    _log.debug(
-        "%s %s", what, " ".join(f"{k}={v}" for k, v in decision.items()),
-        extra={"decision": decision},
-    )
 
 
 def _ring_cell_size(r: float, rho: float) -> float:
@@ -433,7 +380,6 @@ def distance_band_join(
     right_extra: dict[str, str] | None = None,
     build: str = "right",
     strategy: str | None = None,
-    tile_size: float | None = None,
     emit_d2m: bool = False,
     unit: str | None = None,
 ) -> DataFrame:
@@ -449,13 +395,6 @@ def distance_band_join(
     ~3.3r^2 of the true pi*r^2 at the price of ~3.3x build duplication —
     the join-output scan, not the build shuffle, dominates at scale.
     Output: (pid_l, pid_r, d2 exact, dist rounded 1e-6).
-
-    ``strategy="tiled"`` switches to ghost-halo co-partitioning (see
-    band_stats_join): probe repartitioned by spatial tile once, build side
-    halo-duplicated across tile borders, SHUFFLE_HASH join on (tile, cell)
-    with zero further exchange — the both-sides-huge path where neither
-    fits a broadcast and a cell shuffle of the exploded build would
-    dominate. Pair output and downstream semantics are identical.
 
     ``unit``: the DistanceUnit the radius is given in (Meters, Feet,
     Miles, ... — GT/enumeration/DistanceUnit.java:26-58). Converted to
@@ -478,49 +417,6 @@ def distance_band_join(
         *rex.values(),
     )
 
-    if strategy == "tiled":
-        rad = float(radius)
-        T = float(tile_size or cs * max(1, round(8.0 * rad / cs)))
-        nparts = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        probe_pt, bld_pt = (r, l) if build == "left" else (l, r)
-        pxc, pyc = ("rx", "ry") if build == "left" else ("lx", "ly")
-        bxc, byc = ("lx", "ly") if build == "left" else ("rx", "ry")
-        probe = cells.with_point_cells(probe_pt, x=pxc, y=pyc, cell_size=cs)
-        probe = probe.withColumn(
-            "tile_x", F.floor(F.col(pxc) / F.lit(T)).cast("long")
-        ).withColumn("tile_y", F.floor(F.col(pyc) / F.lit(T)).cast("long"))
-        probe = probe.repartition(nparts, "tile_x", "tile_y")
-        bld = cells.explode_circle_cells(
-            bld_pt, x=bxc, y=byc, radius=rad, cell_size=cs
-        )
-        bld = bld.withColumn(
-            "tile_x",
-            F.explode(F.sequence(
-                F.floor((F.col(bxc) - rad) / F.lit(T)).cast("long"),
-                F.floor((F.col(bxc) + rad) / F.lit(T)).cast("long"),
-            )),
-        ).withColumn(
-            "tile_y",
-            F.explode(F.sequence(
-                F.floor((F.col(byc) - rad) / F.lit(T)).cast("long"),
-                F.floor((F.col(byc) + rad) / F.lit(T)).cast("long"),
-            )),
-        )
-        bld = bld.repartition(nparts, "tile_x", "tile_y").hint("SHUFFLE_HASH")
-        dx = F.col("lx") - F.col("rx")
-        dy = F.col("ly") - F.col("ry")
-        d2 = dx * dx + dy * dy
-        joined = probe.join(
-            bld, on=["tile_x", "tile_y", "cell_x", "cell_y"], how="inner"
-        ).where(d2 <= F.lit(rad * rad))
-        return joined.select(
-            "pid_l", "pid_r", d2.alias("d2"),
-            F.round(
-                F.sqrt(d2) / F.lit(ufac) if ufac != 1.0 else F.sqrt(d2), 6
-            ).alias("dist"),
-            *([_d2m_expr().alias("d2m")] if emit_d2m else []),
-            *[F.col(k) for k in (*lex, *rex)],
-        )
     # ``build`` picks which side is ring-exploded and broadcast/shuffled as
     # the join's build relation; the other side stays one-row-one-cell and
     # probes. Default "right" (the conventional small layer); pass "left"
@@ -830,7 +726,7 @@ def _band_pairs_outer(
       partitioning and aggregates with ZERO further exchange: the pair
       stream (with its collect_list buffers) never crosses the network.
 
-    Output: (cell_x, cell_y, pid_l, lx, ly, pid_r, d2, dist); build side is
+    Output: (cell_x, cell_y, pid_l, lx, ly, pid_r, d2); build side is
     always the right layer.
     """
     lid, lx, ly = left_cols
@@ -872,9 +768,7 @@ def _band_pairs_outer(
         bld = bld.hint("SHUFFLE_HASH")
     joined = probe.join(bld, on=cond, how="left_outer")
     return joined.select(
-        "cell_x", "cell_y", "pid_l", "lx", "ly", "pid_r",
-        d2.alias("d2"),
-        F.round(F.sqrt(d2), 6).alias("dist"),
+        "cell_x", "cell_y", "pid_l", "lx", "ly", "pid_r", d2.alias("d2"),
         _d2m_expr().alias("d2m"),  # pruned unless the packed top-k reads it
     )
 
@@ -1294,7 +1188,7 @@ def _topk_join(
         # r leaves short of k neighbours
         return _poisson_lt(math.pi * rho * r * r, k)
 
-    _log_decision("ring survivors", {
+    planner.log_decision(_log, "ring survivors", {
         "site": site, "ring": 1, "radius": r1,
         "predicted_share": _survivor_share(r1), "npend": npend,
     })

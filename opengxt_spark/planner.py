@@ -20,33 +20,23 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import re
 import tempfile
+import time
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 BROADCAST_ROW_LIMIT = 2_000_000  # ~65 MB of (id, cells, params) rows.
 # Measured on the bench suite: a 2.4M-row build side broadcast costs more
 # in serial driver hash-relation construction per execution than the tiled
 # ghost-halo path's one extra shuffle — keep the ceiling at 2M rows.
-
-# ---------------------------------------------------------------------------
-# Plan-time probe memoization. Every strategy/density/count probe is an
-# EAGER Spark job on the driver critical path; round 2 keyed their caches on
-# the raw logical-plan string, which embeds fresh expression ids (``pid#42L``)
-# on every rebuild — so a re-built identical query (each bench repeat, every
-# gate query sharing a layer) re-fired the probes serially. That serial
-# latency was the direct cause of nearest_join's 0.57 N->4N scaling
-# efficiency (VERDICT r2). The canonical key below strips expression ids
-# from the ANALYZED plan — stable text for any re-derivation of the same
-# source+filters — and mixes in a source epoch (the sf dir last registered)
-# because the analyzed plan of a view does not show the underlying parquet
-# path. A key collision can only mis-size a probe (strategy/cell-size are
-# semantics-preserving), never change results.
-# ---------------------------------------------------------------------------
 
 _EXPR_ID = re.compile(r"#\d+")
 _SOURCE_EPOCH: list[str] = [""]
@@ -91,34 +81,32 @@ def _fingerprint(root: str, rel: str, parts: list[str], depth: int) -> None:
 
 def plan_key(df: DataFrame) -> str:
     """Canonical identity of a DataFrame's source+transform chain: analyzed
-    plan text with expression ids stripped, plus the source epoch — a
-    STABLE md5 digest (not Python ``hash``, which is salted per process)
+    plan text with expression ids stripped, plus the source epoch (a
+    view's analyzed plan does not show its parquet path) — a STABLE md5
+    digest (not Python ``hash``, which is salted per process)
     so probe results can persist across driver sessions.
 
-    Plans whose only source is a LocalRelation (createDataFrame test
-    fixtures) print no data in the analyzed plan, so two different local
-    frames with one schema would collide across sessions; their keys get a
-    ``mem:`` prefix and are confined to the in-memory tier."""
-    s = df._jdf.queryExecution().analyzed().toString()
-    digest = hashlib.md5(
-        (_SOURCE_EPOCH[0] + "\x00" + _EXPR_ID.sub("", s)).encode()
-    ).hexdigest()
-    if "LocalRelation" in s or "LocalTableScan" in s:
-        return "mem:" + digest
-    return digest
+    Frames built by createDataFrame (a LocalRelation, or a LogicalRDD over
+    driver-side rows) print no data in the analyzed plan, so two of them
+    with one schema would share a key. Their keys mix in each local
+    leaf's identity (the content hash of a LocalRelation's rows, the id
+    of a LogicalRDD's RDD), get a ``mem:`` prefix and are confined to the
+    in-memory tier."""
+    plan = df._jdf.queryExecution().analyzed()
+    s = plan.toString()
+    text = _SOURCE_EPOCH[0] + "\x00" + _EXPR_ID.sub("", s)
+    local = "LocalRelation" in s or "LogicalRDD" in s
+    if local:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LocalRelation":
+                text += f"\x00{leaf.data().hashCode()}"
+            elif leaf.nodeName() == "LogicalRDD":
+                text += f"\x00{leaf.rdd().id()}"
+    digest = hashlib.md5(text.encode()).hexdigest()
+    return "mem:" + digest if local else digest
 
-
-# ---------------------------------------------------------------------------
-# Persistent probe tier (VERDICT r4 #3). Cold sessions re-paid ~12 s of
-# serial driver probe jobs (density/count/minmax/hot-cell) that the
-# in-memory memoization only amortizes within a session. The probes are a
-# handful of floats keyed by (source epoch, canonical plan) — persist them
-# to one small JSON beside the user cache dir (override/disable with
-# OPENGXT_PROBE_CACHE=path | 0). Write-through with merge-on-save + atomic
-# rename, so concurrent bench/pytest processes can only lose a probe (it
-# re-fires), never corrupt one. At cluster scale the same file would sit
-# beside the dataset (e.g. <table>/_probe_cache.json) keyed identically.
-# ---------------------------------------------------------------------------
 
 _PERSIST: dict[str, dict] = {}
 _PERSIST_LOADED: list[bool] = [False]
@@ -189,10 +177,9 @@ def _store_put(kind: str, key: str, value) -> None:
         pass
 
 
-#: Wall-seconds spent in ACTUAL probe jobs this session (cache misses
-#: only) — bench.py reports the per-query delta as probe_s, replacing the
-#: old warm-minus-steady heuristic that conflated probe cost with the
-#: first execution's codegen/JIT warmup.
+_MEMO: dict[tuple[str, str], object] = {}
+_MEMO_CAP = 512
+#: Wall seconds of the probe jobs this session ran (memo misses only).
 _PROBE_SECONDS: list[float] = [0.0]
 
 
@@ -200,73 +187,92 @@ def probe_seconds() -> float:
     return _PROBE_SECONDS[0]
 
 
-class _probe_timer:
-    def __enter__(self):
-        import time
+def memo_probe(
+    kind: str, frames: list[DataFrame], params, job: Callable[[], object]
+) -> tuple[object, str]:
+    """``(job(), tier)`` memoized per canonical plan: the one memo behind
+    every plan-time probe (count, minmax, hot cell, cell size, density,
+    band pairs).
 
-        self._t0 = time.time()
-        return self
+    Each probe is an eager Spark job on the driver's critical path, and a
+    rebuilt identical query (every bench repeat, every gate query sharing
+    a layer) would otherwise re-fire it serially. The key is ``kind``, the
+    ``plan_key`` of each frame and ``repr(params)``; ``plan_key`` is stable
+    across rebuilds and sessions and changes with the dataset. A stale or
+    colliding key mis-sizes a plan, and for minmax (the knn pack budget)
+    it could corrupt rows, so the key must see every input: the source
+    epoch fingerprint for files, the leaf identity for local frames.
 
-    def __exit__(self, *exc):
-        import time
+    Tiers, first hit wins: ``"memory"`` (this session, at most _MEMO_CAP
+    entries), ``"persisted"`` (one JSON file, OPENGXT_PROBE_CACHE=path, or
+    0 to disable; JSON lists come back as tuples) and ``"job"``. The file
+    lets a cold session skip the probe jobs of file-backed plans. It is
+    written through with merge-on-save and an atomic rename, so
+    concurrent processes can only lose a probe, never corrupt one. Keys
+    over local frames carry ``mem:`` and never reach the file.
 
-        _PROBE_SECONDS[0] += time.time() - self._t0
-        return False
+    Only a job's wall time adds to ``probe_seconds()``. Each call logs one
+    ``decision`` record at DEBUG on this module's logger."""
+    keys = [plan_key(df) for df in frames]
+    key = "|".join(k.removeprefix("mem:") for k in keys) + "|" + repr(params)
+    if any(k.startswith("mem:") for k in keys):
+        key = "mem:" + key
+    seconds = None
+    if (kind, key) in _MEMO:
+        value, tier = _MEMO[(kind, key)], "memory"
+    else:
+        value, tier = _store_get(kind, key), "persisted"
+        if value is None:
+            t0 = time.perf_counter()
+            value, tier = job(), "job"
+            seconds = time.perf_counter() - t0
+            _PROBE_SECONDS[0] += seconds
+            _store_put(kind, key, value)
+        elif isinstance(value, list):
+            value = tuple(value)
+        if len(_MEMO) >= _MEMO_CAP:
+            _MEMO.clear()
+        _MEMO[(kind, key)] = value
+    decision = {"site": "probe", "kind": kind, "tier": tier}
+    if seconds is not None:
+        decision["seconds"] = round(seconds, 3)
+    log_decision(_log, "probe", decision)
+    return value, tier
 
 
-_COUNT_CACHE: dict[tuple[str, int], int] = {}
+def log_decision(log: logging.Logger, what: str, decision: dict) -> None:
+    """One planner decision at DEBUG on ``log``, with the fields also as a
+    ``decision`` dict on the record."""
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug(
+            "%s %s", what, " ".join(f"{k}={v}" for k, v in decision.items()),
+            extra={"decision": decision},
+        )
 
 
 def cached_count(df: DataFrame, cap: int | None = None) -> int:
-    """Memoized (optionally capped) count — at most one eager job per
-    distinct source/plan per session, and (for file-backed plans) per
-    source epoch ACROSS sessions via the persistent tier. ``cap`` returns
+    """Memoized (optionally capped) count. ``cap`` returns
     min(count, cap + 1) via an early-stopping limit."""
-    key = (plan_key(df), cap or -1)
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        stored = _store_get("count", f"{key[0]}:{key[1]}")
-        n = int(stored) if stored is not None else None
-    if n is None:
-        with _probe_timer():
-            n = (df.limit(cap + 1) if cap else df).count()
-        _store_put("count", f"{key[0]}:{key[1]}", n)
-    if len(_COUNT_CACHE) > 512:
-        _COUNT_CACHE.clear()
-    _COUNT_CACHE[key] = n
-    return n
-
-
-_MINMAX_CACHE: dict[tuple[str, str], tuple] = {}
+    return memo_probe(
+        "count", [df], cap or None,
+        lambda: (df.limit(cap + 1) if cap else df).count(),
+    )[0]
 
 
 def cached_minmax(df: DataFrame, col: str) -> tuple:
-    """Memoized (min, max) of one column — a single cheap column-pruned
-    aggregate job per distinct source/plan per session (persisted across
-    sessions when the values are JSON scalars). Used to size the packed
-    top-k encoding (knn_join): the id bound decides the pack factor; the
-    epoch fingerprint in plan_key guarantees a regenerated dataset can
-    never reuse a stale bound."""
-    key = (plan_key(df), col)
-    mm = _MINMAX_CACHE.get(key)
-    if mm is None:
-        stored = _store_get("minmax", f"{key[0]}:{col}")
-        mm = tuple(stored) if stored is not None else None
-    if mm is None:
-        from pyspark.sql import functions as F
+    """Memoized (min, max) of one column: one column-pruned aggregate.
+    Sizes the packed top-k encoding (knn_join), where the id bound decides
+    the pack factor."""
 
-        with _probe_timer():
-            row = df.agg(
-                F.min(col).alias("_mn"), F.max(col).alias("_mx")
-            ).first()
-        mm = (row["_mn"], row["_mx"])
-        _store_put("minmax", f"{key[0]}:{col}", mm)
-    if len(_MINMAX_CACHE) > 512:
-        _MINMAX_CACHE.clear()
-    _MINMAX_CACHE[key] = mm
-    return mm
+    def job() -> tuple:
+        row = df.agg(F.min(col).alias("_mn"), F.max(col).alias("_mx")).first()
+        return (row["_mn"], row["_mx"])
+
+    return memo_probe("minmax", [df], col, job)[0]
 
 
+#: Not a memo_probe: a scan's split count depends on the session's cores
+#: and file-split confs, so it must never persist across sessions.
 _NPART_CACHE: dict[str, int] = {}
 
 
@@ -311,36 +317,20 @@ HOT_CELL_SALT_FACTOR = 4.0
 HOT_CELL_MIN_ROWS = 250_000
 MAX_SALT = 32
 
-_HOTCELL_CACHE: dict[str, int] = {}
-
-
 def max_cell_rows(probe: DataFrame) -> int:
-    """Memoized size of the probe side's hottest (cell_x, cell_y) group —
-    a two-stage count job (map-side partial agg, #cells rows shuffled),
-    fired at most once per canonical plan per session and persisted
-    across sessions for file-backed plans."""
-    key = plan_key(probe)
-    n = _HOTCELL_CACHE.get(key)
-    if n is None:
-        stored = _store_get("hotcell", key)
-        if stored is not None:
-            n = int(stored)
-            _HOTCELL_CACHE[key] = n
-            return n
-    if n is None:
-        with _probe_timer():
-            row = (
-                probe.groupBy("cell_x", "cell_y")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .agg(F.max("c").alias("m"))
-                .first()
-            )
-        n = int(row["m"] or 0)
-        _store_put("hotcell", key, n)
-        if len(_HOTCELL_CACHE) > 512:
-            _HOTCELL_CACHE.clear()
-        _HOTCELL_CACHE[key] = n
-    return n
+    """Memoized size of the probe side's hottest (cell_x, cell_y) group:
+    a two-stage count job (map-side partial agg, #cells rows shuffled)."""
+
+    def job() -> int:
+        row = (
+            probe.groupBy("cell_x", "cell_y")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(F.max("c").alias("m"))
+            .first()
+        )
+        return int(row["m"] or 0)
+
+    return memo_probe("hotcell", [probe], None, job)[0]
 
 
 def choose_strategy(

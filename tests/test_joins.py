@@ -7,6 +7,7 @@ Spark queries and the DuckDB oracle — at sf0.001.
 
 from __future__ import annotations
 
+import json
 import logging
 import math
 import os
@@ -341,5 +342,41 @@ def test_source_epoch_sees_same_second_same_size_rewrite(spark, tmp_path,
         os.utime(part, ns=(sec * 10**9 + 200, sec * 10**9 + 200))
         planner.set_source_epoch(str(root))
         assert planner.cached_count(spark.read.csv(str(table))) == 2
+    finally:
+        planner._SOURCE_EPOCH[0] = saved
+
+
+def test_memo_probe_tiers(spark, tmp_path, monkeypatch, caplog):
+    """A parquet-backed count probe runs its job once, then hits memory,
+    then (memory cleared) the persisted file; createDataFrame frames get
+    keys of their own that never reach that file; only the job call adds
+    probe seconds."""
+    path = tmp_path / "probes.json"
+    monkeypatch.setenv("OPENGXT_PROBE_CACHE", str(path))
+    spark.range(5).write.parquet(str(tmp_path / "t"))
+    saved = planner._SOURCE_EPOCH[0]
+    try:
+        planner.set_source_epoch(str(tmp_path))
+        df = spark.read.parquet(str(tmp_path / "t"))
+        tiers, grew = [], []
+        with caplog.at_level(logging.DEBUG, logger="opengxt_spark.planner"):
+            for clear in (False, False, True):
+                if clear:
+                    planner._MEMO.clear()
+                s0 = planner.probe_seconds()
+                assert planner.cached_count(df) == 5
+                grew.append(planner.probe_seconds() > s0)
+                (d,) = _decisions(caplog)[-1:]
+                assert d["site"] == "probe" and d["kind"] == "count"
+                assert ("seconds" in d) == (d["tier"] == "job")
+                tiers.append(d["tier"])
+        assert tiers == ["job", "memory", "persisted"]
+        assert grew == [True, False, False]
+        stored = json.loads(path.read_text())
+        # same schema, other rows: each local frame gets its own count
+        for rows in ([(1,), (2,)], [(1,), (2,), (3,)]):
+            local = spark.createDataFrame(rows, "memo_probe_a long")
+            assert planner.cached_count(local) == len(rows)
+        assert json.loads(path.read_text()) == stored
     finally:
         planner._SOURCE_EPOCH[0] = saved

@@ -95,6 +95,13 @@ def main() -> None:
         ("knn_join_k4_r50",
          joins.knn_join(ev, pt, k=4, radius=50.0, exclude_self=False),
          False),
+        # The gate sends knn_join_k4_r50 down the single-phase path at this
+        # scale; a forced first radius shows the ring plans. The right side
+        # is the events layer: points_part is too sparse at sf0.01 for a
+        # late ring below the 50-unit cap.
+        ("knn_join_k4_r50 ring (first_radius forced, events self-join)",
+         joins.knn_join(ev, ev, k=4, radius=50.0, first_radius=10.0),
+         False),
         ("raster_to_polygon", raster.raster_to_polygon(spark), False),
         ("polygonize (label propagation + ring assembly by design)",
          transforms_geom.polygonize(
