@@ -13,16 +13,29 @@ as idiomatic Spark DataFrame operators:
 - spatial-distribution descriptors (``distribution.py``),
 - global & local spatial autocorrelation (Moran's I, Getis-Ord Gi*, Geary's C,
   NNI, quadrat) via a distributed spatial-weights pair table (``autocorr.py``),
-- kernel density over a raster grid (``density.py``),
 - image+caption table (BASELINE.json input_hint shape), footprint->tile
-  rasterization, and raster<->vector zonal statistics (``raster.py``),
+  rasterization, raster<->vector zonal statistics and kernel density over
+  a raster grid (``raster.py``),
 - training-data pipeline ops: dedup (exact / MinHash-LSH / SimHash / n-gram
   Jaccard), text quality & language heuristics, ANN similarity (``textops.py``,
   ``ann.py``).
 
 Everything on the hot path is Spark built-in expressions (JVM, whole-stage
-codegen); Python appears only in Arrow-batched pandas UDFs for generic
-polygon geometry and raster tile blocks.
+codegen); Python runs in Arrow-batched pandas stages (pandas UDFs,
+``mapInPandas``, ``applyInPandas``) for generic polygon geometry and raster
+tile blocks, image patches and payloads (``imageops.py``, ``raster.py``),
+WebDataset shard writing (``wds.py``), shapefile and GeoTIFF reading and
+writing (``shapefile.py``, ``geotiff.py``) and streaming state
+(``streaming.py``). Inside a PySpark worker on CPython < 3.12, importing
+the package installs ``pyworker``'s stat-guarded zip-import invalidation,
+so a reused worker stops re-reading ``pyspark.zip`` before every task.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+if "pyspark.worker" in _sys.modules:
+    from . import pyworker as _pyworker
+
+    _pyworker.install()

@@ -435,22 +435,33 @@ def classify_jenks(
     re-bin -> driver DP -> broadcast CASE classify. Output
     (cls, n, vmin, vmax) per class.
 
-    The cluster reduces the rows to a (value, count) histogram; if that
-    has more than JENKS_MAX_BINS distinct values it is re-binned with
-    integer arithmetic before the O(k*m^2) DP, so driver work is bounded
-    at any input scale. Full DuckDB oracle: :func:`jenks_oracle` unrolls
-    the same DP as chained CTEs with bit-identical float decisions.
+    The cluster reduces the rows to a (value, count) histogram and the
+    driver collects at most JENKS_MAX_BINS + 1 rows of it; when there are
+    more distinct values the cluster re-bins the histogram with
+    :func:`quantize_hist`'s integer rule before the O(k*m^2) DP, so the
+    collect and the driver work are bounded at any input scale. Full
+    DuckDB oracle: :func:`jenks_oracle` unrolls the same DP as chained
+    CTEs with bit-identical float decisions.
     """
     from . import planner
 
-    hist = [
-        (int(r["v"]), int(r["c"]))
-        for r in points.groupBy(F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    hist = quantize_hist(hist, JENKS_MAX_BINS)
-    assert len(hist) <= JENKS_MAX_BINS, "jenks histogram bound violated"
+    bins = JENKS_MAX_BINS
+    hist_df = points.groupBy(F.col(value_col).alias("v")).agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    rows = hist_df.limit(bins + 1).collect()
+    if len(rows) > bins:
+        # quantize_hist's re-bin, on the cluster: <= bins rows come back
+        v = F.col("v").cast("long")
+        lo, hi = hist_df.agg(F.min(v), F.max(v)).first()
+        b = F.expr(f"(CAST(v AS BIGINT) - {lo}) * {bins} div {hi - lo + 1}")
+        rows = (
+            hist_df.groupBy(b.alias("b"))
+            .agg(F.max(v).alias("v"), F.sum("c").alias("c"))
+            .collect()
+        )
+    hist = quantize_hist([(int(r["v"]), int(r["c"])) for r in rows], bins)
+    assert len(hist) <= bins, "jenks histogram bound violated"
     brks = jenks_breaks(hist, int(n_classes))
     expr = f"CAST({len(brks)} AS INT)"
     for i in range(len(brks) - 1, -1, -1):

@@ -181,3 +181,36 @@ def test_jenks_classes_are_contiguous_and_better_than_equal(spark, layers):
     vmin, vmax = min(rows), max(rows)
     eq_breaks = [vmin + (vmax - vmin) * (i + 1) / 5.0 for i in range(4)]
     assert sse_for(jenks_breaks) <= sse_for(eq_breaks) + 1e-6
+
+
+def test_jenks_rebins_on_cluster_when_histogram_exceeds_bins(
+    spark, monkeypatch
+):
+    bins = 16
+    vals = [(i * 7919) % 10007 + (i % 3) * 20011 for i in range(1500)]
+    pts = spark.createDataFrame([(v,) for v in vals], "w long")
+    hist: dict[int, int] = {}
+    for v in vals:
+        hist[v] = hist.get(v, 0) + 1
+    assert len(hist) > bins + 1
+    want = classify.jenks_breaks(
+        classify.quantize_hist(sorted(hist.items()), bins), 5
+    )
+
+    received = []
+    frame_cls = type(pts)  # the concrete (classic or Connect) DataFrame
+    collect = frame_cls.collect
+
+    def counting_collect(self):
+        rows = collect(self)
+        received.append(len(rows))
+        return rows
+
+    with monkeypatch.context() as m:
+        m.setattr(classify, "JENKS_MAX_BINS", bins)
+        m.setattr(frame_cls, "collect", counting_collect)
+        out = classify.classify_jenks(pts, 5)
+    assert received and max(received) <= bins + 1
+    out = sorted(out.collect(), key=lambda r: r["cls"])
+    assert [r["vmax"] for r in out[:-1]] == want
+    assert sum(r["n"] for r in out) == len(vals)
